@@ -1,21 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Whole-registry bench: per-query median seconds as JSON lines. Also
+  * the one home of the measurement mains' shared pieces — the session
+  * ([[session]]), the table warm-up and the median — which [[Profile]],
+  * [[Explain]] and [[Verify]] reuse. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up (not timed): touch every table once so per-query numbers
-    // measure the operator, not first-read page-cache/JIT warmup.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").write
-        .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    try Tables.events(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = session()
+    warmTables(spark, sfDir)
     // Force with a real sink (noop write materializes every column +
     // expression, unlike count() which lets Catalyst prune the plan).
     // Dev filter: SPARK_GRAFT_ONLY=q34_simhash,q38_quantiles benches a subset.
@@ -29,10 +23,6 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     val results = selected.map { case (name, fn) =>
       // A failed query records -1.0 (sentinel), never its partial elapsed
       // time — a broken query must not silently deflate the total.
@@ -62,16 +52,17 @@ object Bench {
       val min = if (ok.isEmpty) -1.0 else ok.min
       (name, med, min, runs)
     }
-    val qs = results.map { case (k, med, _, _) => s"\"" + k + "\":" + med }
+    val sf = Json.quote(sfDir)
+    val qs = results.map { case (k, med, _, _) => Json.quote(k) + ":" + med }
       .mkString("{", ",", "}")
     val detail = results.map { case (k, med, min, runs) =>
-      s"\"" + k + "\":{\"median\":" + med + ",\"min\":" + min +
+      Json.quote(k) + ":{\"median\":" + med + ",\"min\":" + min +
         ",\"runs\":" + runs.mkString("[", ",", "]") + "}"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum // failures (-1) excluded
     val totalMin = results.map(_._3).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"total_of_medians","value":$total,"unit":"sec","reps":$reps,"total_min":$totalMin,"queries":$qs,"queries_detail":$detail,"sf":"$sfDir"}"""
+      s"""{"metric":"total_of_medians","value":$total,"unit":"sec","reps":$reps,"total_min":$totalMin,"queries":$qs,"queries_detail":$detail,"sf":$sf}"""
     println(json)
     // The driver keeps only a bounded tail of stdout, which truncated
     // half the per-query numbers in past rounds — persist the full JSON
@@ -90,21 +81,52 @@ object Bench {
     // stdout line so front-truncation eats the detail line, not this one.
     def ms(x: Double): String =
       if (x < 0) "-1" else BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qsCompact = results.map { case (k, med, _, _) => s"\"" + k + "\":" + ms(med) }
+    val qsCompact = results.map { case (k, med, _, _) => Json.quote(k) + ":" + ms(med) }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total_of_medians","value":${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"queries":$qsCompact,"sf":"$sfDir"}""")
+      s"""{"metric":"total_of_medians","value":${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"queries":$qsCompact,"sf":$sf}""")
     // Second r17 measurement-contract fix, declared in OPTIMIZATION_r17.md:
     // every recorded BENCH_r*.json stores a tail of EXACTLY 2000 chars of
     // combined output, and 271 query names alone run ~7 KB — so even the
     // compact medians line above cannot survive front-truncation. Print a
     // total-only summary (~200 chars, no per-query map — a SUBSET map
-    // could misread as dropped queries) as the very last line, after
-    // spark.stop() so no shutdown logging can land behind it. Per-query
+    // could misread as dropped queries) as the last line we print, after
+    // spark.stop() so little shutdown logging lands behind it (shutdown
+    // hooks and sbt trailers still can — a reader must scan the tail
+    // for the last JSON line, which a recorded full run confirms). Per-query
     // numbers stay in the two full lines above and in bench_last.json.
-    val nFailed = results.count(_._2 < 0)
+    // n_failed counts a query with ANY failed rep: its median rests on
+    // fewer runs than the rest.
+    val nFailed = results.count(_._4.exists(_ < 0))
     try spark.stop() catch { case scala.util.control.NonFatal(_) => () }
     println(
-      s"""{"metric":"total_of_medians","value":${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"n_queries":${results.size},"n_failed":$nFailed,"per_query_in":"stdout above + bench_last.json","sf":"$sfDir"}""")
+      s"""{"metric":"total_of_medians","value":${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"n_queries":${results.size},"n_failed":$nFailed,"per_query_in":"stdout above + bench_last.json","sf":$sf}""")
+  }
+
+  /** The engine session at `local[SPARK_GRAFT_CPUS]`, with as many
+    * shuffle partitions. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm-up (not timed): touch every table once so per-query numbers
+    * measure the operator, not first-read page-cache/JIT warmup. */
+  def warmTables(spark: SparkSession, sfDir: String): Unit = {
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "documents", "embeddings").foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet").write
+        .format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+    try Tables.events(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
+  }
+
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 }

@@ -12,8 +12,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * SparkListener. Optionally dumps `.explain("formatted")` to
   * plans/r16/<query>_<tag>.txt (SPARK_GRAFT_PLAN_TAG=before|after).
   *
-  * Same session config/env contract as [[Bench]] so numbers are
-  * comparable: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+  * Same session, env contract (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS),
+  * warm-up and median as [[Bench]], so numbers are comparable.
   */
 object Profile {
   private class Metrics extends SparkListener {
@@ -37,28 +37,14 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
     val planTag = sys.env.get("SPARK_GRAFT_PLAN_TAG")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     val m = new Metrics
     spark.sparkContext.addSparkListener(m)
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    // Warm the page cache like Bench does.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").write
-        .format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    try Tables.events(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
+    Bench.warmTables(spark, sfDir)
     println(f"${"query"}%-34s ${"med_s"}%7s ${"min_s"}%7s ${"jobs"}%5s ${"stg"}%4s ${"tasks"}%6s ${"exec_s"}%7s ${"shR_MB"}%7s ${"shW_MB"}%7s")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -80,7 +66,7 @@ object Profile {
       // listener events are async; give the bus a moment before reading
       Thread.sleep(100)
       val ok = runs.filter(_ >= 0)
-      val med = if (ok.isEmpty) -1.0 else median(ok)
+      val med = if (ok.isEmpty) -1.0 else Bench.median(ok)
       val min = if (ok.isEmpty) -1.0 else ok.min
       println(f"$name%-34s $med%7.3f $min%7.3f ${m.jobs.get}%5d ${m.stages.get}%4d ${m.tasks.get}%6d ${m.execRunMs.get / 1e3}%7.2f ${m.shuffleRead.get / 1e6}%7.1f ${m.shuffleWrite.get / 1e6}%7.1f")
       planTag.foreach { tag =>

@@ -1,14 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Dev filter: SPARK_GRAFT_ONLY=q88_bm25_topk,... dumps a subset.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -57,20 +54,8 @@ object Verify {
     // the "N/N pass" denominator. Extra file — the driver ignores it.
     Files.writeString(Paths.get(s"$outDir/manifest.txt"),
       selected.keys.toSeq.sorted.mkString("\n"))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

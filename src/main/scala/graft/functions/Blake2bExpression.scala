@@ -51,7 +51,7 @@ case class Blake2bHash(child: Expression, bits: Int) extends UnaryExpression {
   * ([[GraftExtensions]] and `GraftFunctions.register`) offer the same
   * name, which the UDF form could not (extensions inject expression
   * builders only — sha3_512 used to exist in one surface and not the
-  * other, the exact drift the shared [[SqlArgs]] design exists to
+  * other, the exact drift the shared [[SqlFunctions]] table exists to
   * prevent). */
 case class Sha3_512Hash(child: Expression) extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -74,84 +74,16 @@ case class Sha3_512Hash(child: Expression) extends UnaryExpression
     copy(child = newChild)
 }
 
-/** SparkSessionExtensions hook — registers the native hash functions for
+/** SparkSessionExtensions hook — registers the native functions for
   * SQL use: `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. Shares
-  * [[SqlArgs]] with `GraftFunctions.register`, so the two SQL surfaces
-  * accept exactly the same calls (same arity errors, same literal
-  * parsing). */
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Iterates the
+  * same [[SqlFunctions]] table as `GraftFunctions.register`, so the two
+  * SQL surfaces accept exactly the same calls (same arity errors, same
+  * literal parsing). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import SqlArgs.{arity, intArg}
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    def inject(name: String, clazz: Class[_])(
-        builder: Seq[Expression] => Expression): Unit =
+  override def apply(e: SparkSessionExtensions): Unit =
+    SqlFunctions.all.foreach { case (name, clazz, builder) =>
       e.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo(clazz.getName, name), builder))
-    inject("blake2b_256", classOf[Blake2bHash])(exprs =>
-      Blake2bHash(arity(exprs, 1, 1, "blake2b_256").head, 256))
-    inject("blake2b_512", classOf[Blake2bHash])(exprs =>
-      Blake2bHash(arity(exprs, 1, 1, "blake2b_512").head, 512))
-    inject("vec_dot", classOf[DotProduct])(exprs => { arity(exprs, 2, 2, "vec_dot")
-      DotProduct(exprs.head, exprs(1)) })
-    inject("shingle_hashes", classOf[ShingleHashes])(exprs => {
-      arity(exprs, 1, 2, "shingle_hashes")
-      ShingleHashes(exprs.head, intArg(exprs, 1, 3, "shingle_hashes")) })
-    inject("shingle_pos_hashes", classOf[ShinglePosHashes])(exprs => {
-      arity(exprs, 1, 2, "shingle_pos_hashes")
-      ShinglePosHashes(exprs.head, intArg(exprs, 1, 3, "shingle_pos_hashes")) })
-    inject("minhash_band_keys", classOf[MinHashBandKeys])(exprs => {
-      arity(exprs, 1, 3, "minhash_band_keys")
-      MinHashBandKeys(exprs.head,
-        intArg(exprs, 1, 128, "minhash_band_keys"),
-        intArg(exprs, 2, 32, "minhash_band_keys")) })
-    inject("simhash64", classOf[SimHash64])(exprs =>
-      SimHash64(arity(exprs, 1, 1, "simhash64").head))
-    inject("bigram_top_count", classOf[BigramTopCount])(exprs =>
-      BigramTopCount(arity(exprs, 1, 1, "bigram_top_count").head))
-    inject("token_top_count", classOf[TokenTopCount])(exprs =>
-      TokenTopCount(arity(exprs, 1, 1, "token_top_count").head))
-    inject("nfc_normalize", classOf[NfcNormalize])(exprs =>
-      NfcNormalize(arity(exprs, 1, 1, "nfc_normalize").head))
-    inject("jaro_winkler", classOf[JaroWinklerSim])(exprs => {
-      arity(exprs, 2, 2, "jaro_winkler")
-      JaroWinklerSim(exprs.head, exprs(1)) })
-    inject("sha3_512", classOf[Sha3_512Hash])(exprs =>
-      Sha3_512Hash(arity(exprs, 1, 1, "sha3_512").head))
-    inject("url_resolve", classOf[ResolveUrlExpr])(exprs => {
-      arity(exprs, 2, 2, "url_resolve")
-      ResolveUrlExpr(exprs.head, exprs(1)) })
-    inject("robots_glob", classOf[RobotsGlobMatch])(exprs => {
-      arity(exprs, 2, 2, "robots_glob")
-      RobotsGlobMatch(exprs.head, exprs(1)) })
-    inject("pct_normalize", classOf[PctNormalizeExpr])(exprs =>
-      PctNormalizeExpr(arity(exprs, 1, 1, "pct_normalize").head))
-    inject("visible_text", classOf[VisibleTextExpr])(exprs =>
-      VisibleTextExpr(arity(exprs, 1, 1, "visible_text").head))
-    inject("html_unescape", classOf[HtmlUnescapeExpr])(exprs =>
-      HtmlUnescapeExpr(arity(exprs, 1, 1, "html_unescape").head))
-    inject("attr_value", classOf[AttrValueExpr])(exprs => {
-      arity(exprs, 2, 2, "attr_value")
-      AttrValueExpr(exprs.head, SqlArgs.strArg(exprs, 1, "attr_value")) })
-    inject("md5_shingle_hashes", classOf[Md5ShingleHashes])(exprs => {
-      arity(exprs, 1, 2, "md5_shingle_hashes")
-      Md5ShingleHashes(exprs.head, intArg(exprs, 1, 3, "md5_shingle_hashes")) })
-    inject("md5_shingle_pos_hashes", classOf[Md5ShinglePosHashes])(exprs => {
-      arity(exprs, 1, 2, "md5_shingle_pos_hashes")
-      Md5ShinglePosHashes(exprs.head,
-        intArg(exprs, 1, 3, "md5_shingle_pos_hashes")) })
-    inject("dup_ngram_stats", classOf[DupNgramStats])(exprs => {
-      arity(exprs, 1, 2, "dup_ngram_stats")
-      DupNgramStats(exprs.head, intArg(exprs, 1, 5, "dup_ngram_stats")) })
-    inject("script_gate_lang", classOf[ScriptGateLang])(exprs => {
-      arity(exprs, 1, 1, "script_gate_lang")
-      ScriptGateLang(exprs.head,
-        graft.ops.TextAnalysis.ScriptGateMinShareMicros) })
-    inject("md5_minhash", classOf[Md5MinHashK])(exprs => {
-      arity(exprs, 1, 3, "md5_minhash")
-      Md5MinHashK(exprs.head, intArg(exprs, 1, 3, "md5_minhash"),
-        intArg(exprs, 2, 16, "md5_minhash")) })
-    inject("trigram_lang_best", classOf[TrigramLangBest])(exprs =>
-      TrigramLangBest(arity(exprs, 1, 1, "trigram_lang_best").head))
-  }
+    }
 }

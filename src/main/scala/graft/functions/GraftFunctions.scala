@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   *  - blake2b_256 / blake2b_512 / sha3_512 hex digests of UTF-8 text
   *    (reference `src/catenae/utils.py:42-57`),
   *  - uid = blake2b_256(uuid4)[:12] (reference `utils.py:60-61`),
-  *  - epoch-second / epoch-milli timestamps (reference `utils.py:11-16`),
+  *  - epoch-second / epoch-milli timestamps (reference `utils.py:11-16`)
+  *    → Spark built-ins `unix_timestamp` / `unix_millis` over
+  *    `current_timestamp()` (no port needed),
   *  - JSON serde (reference `utils.py:19-39`) → Spark built-ins
   *    `to_json` / `from_json` / `get_json_object` (no port needed).
   *
@@ -50,78 +52,100 @@ object GraftFunctions {
     * 12 hex chars — the distributed analog of the reference uid. */
   def uidFor(c: Column): Column = substring(blake2b_256(c.cast("string")), 1, 12)
 
-  /** Epoch seconds / millis (reference `utils.py:11-16`). */
-  def timestampSec(): Column = unix_timestamp(current_timestamp())
-  def timestampMs(): Column  = unix_millis(current_timestamp())
-
   /** Register SQL-callable names so `spark.sql` queries can use them too
     * (blake2b as the native codegen'd expression; for cluster deployments
     * prefer `spark.sql.extensions=graft.functions.GraftExtensions` —
-    * [[GraftExtensions]] and this method share [[SqlArgs]], so the two
-    * SQL surfaces cannot drift). */
-  def register(spark: SparkSession): Unit = {
-    import SqlArgs.{arity, intArg}
-    def reg(name: String)(
-        builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
+    * both surfaces iterate [[SqlFunctions.all]], so they cannot drift). */
+  def register(spark: SparkSession): Unit =
+    SqlFunctions.all.foreach { case (name, _, builder) =>
       org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, name, builder)
-    reg("blake2b_256")(exprs => Blake2bHash(arity(exprs, 1, 1, "blake2b_256").head, 256))
-    reg("blake2b_512")(exprs => Blake2bHash(arity(exprs, 1, 1, "blake2b_512").head, 512))
-    reg("vec_dot")(exprs => { arity(exprs, 2, 2, "vec_dot")
-      DotProduct(exprs.head, exprs(1)) })
-    reg("bigram_top_count")(exprs =>
-      BigramTopCount(arity(exprs, 1, 1, "bigram_top_count").head))
-    reg("token_top_count")(exprs =>
-      TokenTopCount(arity(exprs, 1, 1, "token_top_count").head))
-    reg("nfc_normalize")(exprs =>
-      NfcNormalize(arity(exprs, 1, 1, "nfc_normalize").head))
-    reg("shingle_hashes")(exprs => { arity(exprs, 1, 2, "shingle_hashes")
-      ShingleHashes(exprs.head, intArg(exprs, 1, 3, "shingle_hashes")) })
-    reg("shingle_pos_hashes")(exprs => { arity(exprs, 1, 2, "shingle_pos_hashes")
-      ShinglePosHashes(exprs.head, intArg(exprs, 1, 3, "shingle_pos_hashes")) })
-    reg("minhash_band_keys")(exprs => { arity(exprs, 1, 3, "minhash_band_keys")
-      MinHashBandKeys(exprs.head,
-        intArg(exprs, 1, 128, "minhash_band_keys"),
-        intArg(exprs, 2, 32, "minhash_band_keys")) })
-    reg("simhash64")(exprs => SimHash64(arity(exprs, 1, 1, "simhash64").head))
-    reg("jaro_winkler")(exprs => { arity(exprs, 2, 2, "jaro_winkler")
-      JaroWinklerSim(exprs.head, exprs(1)) })
-    reg("sha3_512")(exprs => Sha3_512Hash(arity(exprs, 1, 1, "sha3_512").head))
-    reg("url_resolve")(exprs => { arity(exprs, 2, 2, "url_resolve")
-      ResolveUrlExpr(exprs.head, exprs(1)) })
-    reg("robots_glob")(exprs => { arity(exprs, 2, 2, "robots_glob")
-      RobotsGlobMatch(exprs.head, exprs(1)) })
-    reg("pct_normalize")(exprs =>
-      PctNormalizeExpr(arity(exprs, 1, 1, "pct_normalize").head))
-    reg("visible_text")(exprs =>
-      VisibleTextExpr(arity(exprs, 1, 1, "visible_text").head))
-    reg("html_unescape")(exprs =>
-      HtmlUnescapeExpr(arity(exprs, 1, 1, "html_unescape").head))
-    reg("attr_value")(exprs => { arity(exprs, 2, 2, "attr_value")
-      AttrValueExpr(exprs.head, SqlArgs.strArg(exprs, 1, "attr_value")) })
-    reg("md5_shingle_hashes")(exprs => { arity(exprs, 1, 2, "md5_shingle_hashes")
-      Md5ShingleHashes(exprs.head, intArg(exprs, 1, 3, "md5_shingle_hashes")) })
-    reg("md5_shingle_pos_hashes")(exprs => {
-      arity(exprs, 1, 2, "md5_shingle_pos_hashes")
-      Md5ShinglePosHashes(exprs.head,
-        intArg(exprs, 1, 3, "md5_shingle_pos_hashes")) })
-    reg("dup_ngram_stats")(exprs => { arity(exprs, 1, 2, "dup_ngram_stats")
-      DupNgramStats(exprs.head, intArg(exprs, 1, 5, "dup_ngram_stats")) })
-    reg("script_gate_lang")(exprs => { arity(exprs, 1, 1, "script_gate_lang")
-      ScriptGateLang(exprs.head,
-        graft.ops.TextAnalysis.ScriptGateMinShareMicros) })
-    reg("md5_minhash")(exprs => { arity(exprs, 1, 3, "md5_minhash")
-      Md5MinHashK(exprs.head, intArg(exprs, 1, 3, "md5_minhash"),
-        intArg(exprs, 2, 16, "md5_minhash")) })
-    reg("trigram_lang_best")(exprs =>
-      TrigramLangBest(arity(exprs, 1, 1, "trigram_lang_best").head))
-  }
+    }
 }
 
-/** Shared argument handling for the two SQL registration surfaces
-  * (`GraftFunctions.register` and [[GraftExtensions]]): one definition of
-  * literal parsing and arity checking, so a session-registered function
-  * and an extensions-injected one accept exactly the same calls. */
+/** THE table of SQL-callable native functions — `(name, expression
+  * class, builder)` — iterated by both SQL surfaces
+  * (`GraftFunctions.register` and [[GraftExtensions]]), so a function
+  * exists in both or neither, with the same [[SqlArgs]] arity errors
+  * and literal rules. */
+private[functions] object SqlFunctions {
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import SqlArgs.{arity, intArg}
+
+  type Builder = Seq[Expression] => Expression
+
+  private def fn(name: String, clazz: Class[_])(
+      builder: Builder): (String, Class[_], Builder) = (name, clazz, builder)
+
+  val all: Seq[(String, Class[_], Builder)] = Seq(
+    fn("blake2b_256", classOf[Blake2bHash])(exprs =>
+      Blake2bHash(arity(exprs, 1, 1, "blake2b_256").head, 256)),
+    fn("blake2b_512", classOf[Blake2bHash])(exprs =>
+      Blake2bHash(arity(exprs, 1, 1, "blake2b_512").head, 512)),
+    fn("vec_dot", classOf[DotProduct])(exprs => { arity(exprs, 2, 2, "vec_dot")
+      DotProduct(exprs.head, exprs(1)) }),
+    fn("shingle_hashes", classOf[ShingleHashes])(exprs => {
+      arity(exprs, 1, 2, "shingle_hashes")
+      ShingleHashes(exprs.head, intArg(exprs, 1, 3, "shingle_hashes")) }),
+    fn("shingle_pos_hashes", classOf[ShinglePosHashes])(exprs => {
+      arity(exprs, 1, 2, "shingle_pos_hashes")
+      ShinglePosHashes(exprs.head, intArg(exprs, 1, 3, "shingle_pos_hashes")) }),
+    fn("minhash_band_keys", classOf[MinHashBandKeys])(exprs => {
+      arity(exprs, 1, 3, "minhash_band_keys")
+      MinHashBandKeys(exprs.head,
+        intArg(exprs, 1, 128, "minhash_band_keys"),
+        intArg(exprs, 2, 32, "minhash_band_keys")) }),
+    fn("simhash64", classOf[SimHash64])(exprs =>
+      SimHash64(arity(exprs, 1, 1, "simhash64").head)),
+    fn("bigram_top_count", classOf[BigramTopCount])(exprs =>
+      BigramTopCount(arity(exprs, 1, 1, "bigram_top_count").head)),
+    fn("token_top_count", classOf[TokenTopCount])(exprs =>
+      TokenTopCount(arity(exprs, 1, 1, "token_top_count").head)),
+    fn("nfc_normalize", classOf[NfcNormalize])(exprs =>
+      NfcNormalize(arity(exprs, 1, 1, "nfc_normalize").head)),
+    fn("jaro_winkler", classOf[JaroWinklerSim])(exprs => {
+      arity(exprs, 2, 2, "jaro_winkler")
+      JaroWinklerSim(exprs.head, exprs(1)) }),
+    fn("sha3_512", classOf[Sha3_512Hash])(exprs =>
+      Sha3_512Hash(arity(exprs, 1, 1, "sha3_512").head)),
+    fn("url_resolve", classOf[ResolveUrlExpr])(exprs => {
+      arity(exprs, 2, 2, "url_resolve")
+      ResolveUrlExpr(exprs.head, exprs(1)) }),
+    fn("robots_glob", classOf[RobotsGlobMatch])(exprs => {
+      arity(exprs, 2, 2, "robots_glob")
+      RobotsGlobMatch(exprs.head, exprs(1)) }),
+    fn("pct_normalize", classOf[PctNormalizeExpr])(exprs =>
+      PctNormalizeExpr(arity(exprs, 1, 1, "pct_normalize").head)),
+    fn("visible_text", classOf[VisibleTextExpr])(exprs =>
+      VisibleTextExpr(arity(exprs, 1, 1, "visible_text").head)),
+    fn("html_unescape", classOf[HtmlUnescapeExpr])(exprs =>
+      HtmlUnescapeExpr(arity(exprs, 1, 1, "html_unescape").head)),
+    fn("attr_value", classOf[AttrValueExpr])(exprs => {
+      arity(exprs, 2, 2, "attr_value")
+      AttrValueExpr(exprs.head, SqlArgs.strArg(exprs, 1, "attr_value")) }),
+    fn("md5_shingle_hashes", classOf[Md5ShingleHashes])(exprs => {
+      arity(exprs, 1, 2, "md5_shingle_hashes")
+      Md5ShingleHashes(exprs.head, intArg(exprs, 1, 3, "md5_shingle_hashes")) }),
+    fn("md5_shingle_pos_hashes", classOf[Md5ShinglePosHashes])(exprs => {
+      arity(exprs, 1, 2, "md5_shingle_pos_hashes")
+      Md5ShinglePosHashes(exprs.head,
+        intArg(exprs, 1, 3, "md5_shingle_pos_hashes")) }),
+    fn("dup_ngram_stats", classOf[DupNgramStats])(exprs => {
+      arity(exprs, 1, 2, "dup_ngram_stats")
+      DupNgramStats(exprs.head, intArg(exprs, 1, 5, "dup_ngram_stats")) }),
+    fn("script_gate_lang", classOf[ScriptGateLang])(exprs => {
+      arity(exprs, 1, 1, "script_gate_lang")
+      ScriptGateLang(exprs.head,
+        graft.ops.TextAnalysis.ScriptGateMinShareMicros) }),
+    fn("md5_minhash", classOf[Md5MinHashK])(exprs => {
+      arity(exprs, 1, 3, "md5_minhash")
+      Md5MinHashK(exprs.head, intArg(exprs, 1, 3, "md5_minhash"),
+        intArg(exprs, 2, 16, "md5_minhash")) }),
+    fn("trigram_lang_best", classOf[TrigramLangBest])(exprs =>
+      TrigramLangBest(arity(exprs, 1, 1, "trigram_lang_best").head)))
+}
+
+/** Argument handling for the [[SqlFunctions]] builders: one definition
+  * of literal parsing and arity checking. */
 private[functions] object SqlArgs {
   import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 

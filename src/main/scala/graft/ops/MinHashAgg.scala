@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{col, udaf}
+import org.apache.spark.sql.functions.udaf
 
 /** Typed UDAF (SURVEY.md §2.2 UDAF row): group-wise MinHash signature.
   *
@@ -51,10 +51,4 @@ object MinHashSignatureAgg extends Aggregator[Seq[String], Array[Long], Array[Lo
   /** Estimated Jaccard between two signatures: fraction of agreeing mins. */
   def estimateJaccard(a: Array[Long], b: Array[Long]): Double =
     a.zip(b).count { case (x, y) => x == y }.toDouble / a.length
-
-  /** Per-group minhash signatures for a document frame. */
-  def groupSignatures(docs: DataFrame, groupCol: String): DataFrame =
-    docs.select(col(groupCol), Dedup.shingles(col("text")).as("s"))
-      .groupBy(groupCol)
-      .agg(asColumn(Seq(col("s"))).as("signature"))
 }

@@ -175,11 +175,6 @@ object Multimodal {
       }
   }
 
-  /** Pre-round-4 name for [[decode]] (when all formats were stubbed). */
-  @deprecated("use decode — header parsing is real now", "0.4")
-  def decodeStub(spark: SparkSession, docs: DataFrame): Dataset[MediaFeature] =
-    decode(spark, docs)
-
   /** Resize stub: maps decoded media features to target dimensions
     * preserving aspect ratio (longest side = `maxSide`). The arithmetic is
     * the real resize contract; only the pixel work is stubbed out with the

@@ -1208,19 +1208,6 @@ object TextAnalysis {
         coalesce(col("token_id"), lit(unkId)).as("token_id"))
   }
 
-  /** Quality-feature battery (mirrors q52 but reusable as a library op). */
-  def qualityFeatures(docs: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val nTok = size(toks).cast("long")
-    Spread.cpu(docs).select(col("doc_id"), col("lang"),
-      nTok.as("n_tokens"),
-      size(array_distinct(toks)).cast("long").as("n_uniq"),
-      round(size(array_distinct(toks)).cast("double") / nTok, 4).as("uniq_ratio"),
-      round((length(col("text")) - nTok + 1).cast("double") / nTok, 4).as("avg_token_len"),
-      round(size(filter(toks, t => t.isin("the", "a", "of"))).cast("double") / nTok, 4)
-        .as("stopword_ratio"))
-  }
-
   /** Latin∪Cyrillic homoglyph spoofing signals — the mixed-script check
     * every crawl pipeline runs against Unicode-confusable spam (a
     * Cyrillic 'а' inside a Latin word evades exact AND shingle dedup

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.ops.{TextAnalysis, WebText}
 
@@ -39,14 +38,15 @@ import graft.ops.{TextAnalysis, WebText}
   * Exactly-once: per-bucket `_batch` marks ride each rotate (the
   * [[FrontierLink]] count-merge discipline), so a crash-replayed batch
   * merges exactly the buckets whose merge hadn't landed; the pairs
-  * refresh reads members AFTER the member merge, so a crash between
-  * the two stages replays into a consistent view. */
+  * refresh runs after the member merge of EVERY touched bucket and
+  * reads members after it, so a crash between the two stages replays
+  * into a consistent view. */
 class BitextHarvestLink(input: String, membersStream: String,
                         pairsStream: String, numBuckets: Int = 16,
                         minLenRatioMicros: Long = 500000L) extends Link {
   require(numBuckets >= 1, s"numBuckets >= 1, got $numBuckets")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: two bucketed streams
+  val output: Option[String] = None // onBatch: two bucketed streams
 
   private val membersSchema = StructType(Seq(
     StructField("cluster_key", StringType), StructField("lang", StringType),
@@ -62,9 +62,9 @@ class BitextHarvestLink(input: String, membersStream: String,
     StructField("len_ratio_micros", LongType),
     StructField("bucket", IntegerType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = pairsStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(membersStream, membersSchema, Seq("bucket"))
     registry.declare(pairsStream, pairsSchema, Seq("bucket"))
     // the bucket modulus is part of BOTH tables' layout — persisted
@@ -73,57 +73,49 @@ class BitextHarvestLink(input: String, membersStream: String,
     // stale pairs where the anti-join can never reach them)
     registry.pinBucketCount(membersStream, numBuckets)
     registry.pinBucketCount(pairsStream, numBuckets)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, pairsStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bm = BitextHarvestLink.clusterMembers(
-            batch.select(col("url"), col("html"), col("text")))
-          .withColumn("bucket",
-            BitextHarvestLink.bucketOf(col("cluster_key"), numBuckets))
-          .localCheckpoint()
-        // touched-bucket ids: bounded by numBuckets — control-plane
-        val touched = bm.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        touched.foreach { bkt =>
-          val bkMembers = bm.filter(col("bucket") === bkt).drop("bucket")
-          val merged = registry
-            .refreshPartitionMeta(membersStream, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!merged) {
-            // recrawl wins: the old row of a re-arriving url is
-            // replaced, never duplicated
-            registry.refreshPartition(membersStream, bkt,
-              registry.readPartition(membersStream, bkt)
-                .join(bkMembers.select("cluster_key", "lang", "url"),
-                  Seq("cluster_key", "lang", "url"), "left_anti")
-                .unionByName(bkMembers),
-              Map("batch" -> batchId.toString))
-          }
-          val aligned = registry
-            .refreshPartitionMeta(pairsStream, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!aligned) {
-            val clusters = bkMembers.select("cluster_key").distinct()
-            val members = registry.readPartition(membersStream, bkt)
-            // one document per (cluster, lang): lexicographically
-            // first (url, text) — deterministic under arrival order
-            val docs = members
-              .join(clusters, Seq("cluster_key"), "left_semi")
-              .groupBy("cluster_key", "lang")
-              .agg(min(struct(col("url"), col("text"))).as("graft_w"))
-              .select(col("cluster_key"), col("lang"),
-                col("graft_w").getField("text").as("text"))
-            val fresh = TextAnalysis.bitextAlign(docs,
-              minLenRatioMicros = minLenRatioMicros)
-            val kept = registry.readPartition(pairsStream, bkt)
-              .join(clusters, Seq("cluster_key"), "left_anti")
-            registry.refreshPartition(pairsStream, bkt,
-              kept.unionByName(fresh), Map("batch" -> batchId.toString))
-          }
-        }
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val bm = BitextHarvestLink.clusterMembers(
+        batch.select(col("url"), col("html"), col("text")))
+      .withColumn("bucket",
+        BitextHarvestLink.bucketOf(col("cluster_key"), numBuckets))
+      .localCheckpoint()
+    // recrawl wins: the old row of a re-arriving url is replaced,
+    // never duplicated
+    val touched = registry.mergeBuckets(membersStream, bm, batchId) {
+      (old, bkMembers) =>
+        old.join(bkMembers.select("cluster_key", "lang", "url"),
+            Seq("cluster_key", "lang", "url"), "left_anti")
+          .unionByName(bkMembers)
+    }
+    // pairs AFTER every touched bucket's member merge (see the crash
+    // contract in the scaladoc)
+    touched.foreach { bkt =>
+      val aligned = registry
+        .refreshPartitionMeta(pairsStream, bkt, "batch")
+        .exists(_.toLong >= batchId)
+      if (!aligned) {
+        val clusters = bm.filter(col("bucket") === bkt)
+          .select("cluster_key").distinct()
+        val members = registry.readPartition(membersStream, bkt)
+        // one document per (cluster, lang): lexicographically
+        // first (url, text) — deterministic under arrival order
+        val docs = members
+          .join(clusters, Seq("cluster_key"), "left_semi")
+          .groupBy("cluster_key", "lang")
+          .agg(min(struct(col("url"), col("text"))).as("graft_w"))
+          .select(col("cluster_key"), col("lang"),
+            col("graft_w").getField("text").as("text"))
+        val fresh = TextAnalysis.bitextAlign(docs,
+          minLenRatioMicros = minLenRatioMicros)
+        val kept = registry.readPartition(pairsStream, bkt)
+          .join(clusters, Seq("cluster_key"), "left_anti")
+        registry.refreshPartition(pairsStream, bkt,
+          kept.unionByName(fresh), Map("batch" -> batchId.toString))
       }
-      .start()
+    }
   }
 }
 

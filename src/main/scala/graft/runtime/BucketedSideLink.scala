@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.ops.WebText
 
@@ -43,46 +42,31 @@ class BucketedSideLink(input: String, outputStream: String,
   require(urlCol.nonEmpty || hostCol.nonEmpty,
     "one of urlCol/hostCol must name the bucketing key column")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: bucketed merges
+  val output: Option[String] = None // onBatch: bucketed merges
 
   private def keyCol: org.apache.spark.sql.Column =
     if (urlCol.nonEmpty) WebText.registeredDomain(col(urlCol))
     else col(hostCol)
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = outputStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     val inSchema = registry.schemaOf(input)
     registry.declare(outputStream,
       StructType(inSchema.fields :+ StructField("bucket", IntegerType)),
       Seq("bucket"))
     registry.pinBucketCount(outputStream, numBuckets)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation",
-        registry.checkpointDir(name, outputStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.distinct()
-          .withColumn("bucket",
-            StreamRegistry.bucketOf(keyCol, numBuckets))
-          .localCheckpoint()
-        // touched-bucket ids: bounded by numBuckets — control-plane
-        val touched = b.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        touched.foreach { bkt =>
-          val merged = registry
-            .refreshPartitionMeta(outputStream, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!merged) {
-            registry.refreshPartition(outputStream, bkt,
-              registry.readPartition(outputStream, bkt)
-                .unionByName(b.filter(col("bucket") === bkt)
-                  .drop("bucket"))
-                .distinct(),
-              Map("batch" -> batchId.toString))
-          }
-        }
-      }
-      .start()
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val b = batch.distinct()
+      .withColumn("bucket",
+        StreamRegistry.bucketOf(keyCol, numBuckets))
+      .localCheckpoint()
+    registry.mergeBuckets(outputStream, b, batchId) { (old, slice) =>
+      old.unionByName(slice).distinct()
+    }
+    ()
   }
 }

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ops.WebText
 
@@ -41,7 +40,7 @@ import graft.ops.WebText
 class CanonicalGateLink(input: String, survivorsStream: String,
                         targetsStream: String) extends Link {
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: two streams below
+  val output: Option[String] = None // onBatch: two streams below
 
   private val survivorSchema = StructType(Seq(
     StructField("url", StringType), StructField("html", StringType),
@@ -49,30 +48,27 @@ class CanonicalGateLink(input: String, survivorsStream: String,
   private val targetSchema = StructType(Seq(
     StructField("canonical_target", StringType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = survivorsStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(survivorsStream, survivorSchema)
     registry.declare(targetsStream, targetSchema)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation",
-        registry.checkpointDir(name, survivorsStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val survivors = CanonicalGateLink.gate(
-          batch.select(col("url"), col("html")),
-          registry.read(targetsStream))
-          // materialize: the plan reads targetsStream, which the second
-          // write below appends to
-          .localCheckpoint()
-        // survivors FIRST (see the crash-ordering contract above): a
-        // crash between the writes must leave a duplicate-admitting
-        // gap, never a document-dropping one
-        registry.write(survivors, survivorsStream)
-        registry.write(
-          survivors.select(col("canonical_target")), targetsStream)
-      }
-      .start()
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val survivors = CanonicalGateLink.gate(
+      batch.select(col("url"), col("html")),
+      registry.read(targetsStream))
+      // materialize: the plan reads targetsStream, which the second
+      // write below appends to
+      .localCheckpoint()
+    // survivors FIRST (see the crash-ordering contract above): a
+    // crash between the writes must leave a duplicate-admitting
+    // gap, never a document-dropping one
+    registry.write(survivors, survivorsStream)
+    registry.write(
+      survivors.select(col("canonical_target")), targetsStream)
   }
 }
 

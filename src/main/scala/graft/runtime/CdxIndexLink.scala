@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.ops.Warc
 
@@ -37,30 +36,27 @@ class CdxIndexLink(input: String, outputStream: String,
     s"filenamePattern needs exactly one {} chunk-id slot, got " +
       s"'$filenamePattern'")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: declared + written below
+  val output: Option[String] = None // onBatch: declared + written below
 
   private val outSchema = StructType(Seq(
     StructField("urlkey", StringType), StructField("chunk_id", LongType),
     StructField("rec_idx", LongType), StructField("cdxj_line", StringType),
     StructField("batch", LongType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = outputStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit =
     registry.declare(outputStream, outSchema, Seq("batch"))
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
     val Array(pre, post) = filenamePattern.split("\\{\\}", -1)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, outputStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = Warc.cdxjLines(
-            Warc.parseWarcIndex(batch.sparkSession, batch),
-            filename = concat(lit(pre), col("chunk_id").cast("string"),
-              lit(post)),
-            timestamp = lit(timestamp))
-          .select("urlkey", "chunk_id", "rec_idx", "cdxj_line")
-        registry.refreshPartition(outputStream, batchId, out)
-      }
-      .start()
+    val out = Warc.cdxjLines(
+        Warc.parseWarcIndex(batch.sparkSession, batch),
+        filename = concat(lit(pre), col("chunk_id").cast("string"),
+          lit(post)),
+        timestamp = lit(timestamp))
+      .select("urlkey", "chunk_id", "rec_idx", "cdxj_line")
+    registry.refreshPartition(outputStream, batchId, out)
   }
 }

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ops.WebText
 
@@ -32,24 +31,20 @@ import graft.ops.WebText
   * replayed entry's in-link evidence. */
 class FeedDiscoveryLink(input: String, linksOut: String) extends Link {
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: declared + written below
+  val output: Option[String] = None // onBatch: declared + written below
 
   private val linkSchema = StructType(Seq(StructField("link", StringType),
     StructField("batch", org.apache.spark.sql.types.LongType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = linksOut
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit =
     registry.declare(linksOut, linkSchema, Seq("batch"))
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, linksOut))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        registry.refreshPartition(linksOut, batchId,
-          FeedDiscoveryLink.entryLinks(batch))
-      }
-      .start()
-  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit =
+    registry.refreshPartition(linksOut, batchId,
+      FeedDiscoveryLink.entryLinks(batch))
 }
 
 object FeedDiscoveryLink {

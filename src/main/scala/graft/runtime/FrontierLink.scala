@@ -3,7 +3,6 @@ package graft.runtime
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.ops.{Robots, WebText}
 
@@ -179,7 +178,7 @@ class FrontierLink(input: String, crawledStream: String,
     "set historyStream (raw log) OR healthStream (maintained " +
       "aggregate), not both — two ladder inputs would double-join")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: four streams below
+  val output: Option[String] = None // onBatch: four streams below
 
   private val countsName =
     if (countsStream.nonEmpty) countsStream else s"${frontierStream}_counts"
@@ -200,9 +199,9 @@ class FrontierLink(input: String, crawledStream: String,
     StructField("delay_ms", LongType), StructField("not_before_ms", LongType),
     StructField("bucket", IntegerType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = frontierStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(crawledStream, crawledSchema, Seq("batch"))
     registry.declare(crawledSetName, crawledSetSchema, Seq("bucket"))
     registry.declare(linksStream, linkSchema, Seq("batch"))
@@ -220,130 +219,105 @@ class FrontierLink(input: String, crawledStream: String,
     // HostHealthLink fail loudly at ITS start, not silently misread
     if (healthStream.nonEmpty)
       registry.pinBucketCount(healthStream, numBuckets)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation",
-        registry.checkpointDir(name, frontierStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.select(col("url"), col("html")).localCheckpoint()
-        // audit writes are batch-partition REWRITES, not appends: a
-        // crash-replayed batch replaces its own batch=<id> directory,
-        // so the logs' contents stay exactly-once and the offline
-        // rebuild invariant counts == linkCounts(log) survives replay
-        registry.refreshPartition(crawledStream, batchId,
-          b.select(col("url")))
-        // crawled-SET merge: the distinct crawled urls, bucketed by the
-        // TARGET-side host hash (a crawled url evicts the count row
-        // whose link equals it — same registeredDomain, same bucket),
-        // merged per touched bucket with the count-table discipline so
-        // each frontier recompute anti-joins exactly one partition
-        val bcr = b.select(col("url")).distinct()
-          .withColumn("bucket", FrontierLink.bucketOf(
-            WebText.registeredDomain(col("url")), numBuckets))
-          .localCheckpoint()
-        val crawledTouched = bcr.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        crawledTouched.foreach { bkt =>
-          val merged = registry
-            .refreshPartitionMeta(crawledSetName, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!merged) {
-            registry.refreshPartition(crawledSetName, bkt,
-              registry.readPartition(crawledSetName, bkt)
-                .unionByName(bcr.filter(col("bucket") === bkt).drop("bucket"))
-                .distinct(),
-              Map("batch" -> batchId.toString))
-          }
-        }
-        // ONE extraction per batch feeds both the audit log and the
-        // count merge (they must agree row-for-row)
-        val batchLinks = WebText.resolvedLinkRows(b, "url", "html")
-          .select(col("link")).localCheckpoint()
-        registry.refreshPartition(linksStream, batchId, batchLinks)
-        // incremental count merge, bucket by bucket: only the buckets
-        // the batch touches are read + rewritten; each bucket's _batch
-        // mark rides its own rotate, so a replay merges exactly the
-        // buckets whose merge hadn't landed (exactly-once per bucket)
-        val bc = FrontierLink.linkCounts(batchLinks)
-          .withColumn("bucket", FrontierLink.bucketOf(col("host"), numBuckets))
-          .localCheckpoint()
-        // touched-bucket ids: bounded by numBuckets — control-plane
-        val touched = bc.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        touched.foreach { bkt =>
-          val merged = registry.refreshPartitionMeta(countsName, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!merged) {
-            registry.refreshPartition(countsName, bkt,
-              registry.readPartition(countsName, bkt)
-                .unionByName(bc.filter(col("bucket") === bkt).drop("bucket"))
-                .groupBy("link", "host").agg(sum("inlinks").as("inlinks")),
-              Map("batch" -> batchId.toString))
-          }
-        }
-        // INCREMENTAL frontier refresh: only the buckets whose inputs
-        // changed can change rank — buckets the count merge touched,
-        // buckets of the batch's crawled hosts (their rows must leave
-        // the view), the extras' buckets, and — the side channel —
-        // every previously-refreshed bucket whose recorded PER-BUCKET
-        // side signature differs: a robots/history/hint/retry update
-        // affects hosts in buckets no link touched, and serving them
-        // stale until something else lands there would keep a fetcher
-        // scheduling now-disallowed or now-backed-off URLs. The
-        // signatures cost one scan per BOUNDED side stream per batch
-        // (the r14 whole-view refresh re-read them per batch too);
-        // bucket scope means the loop's own history appends invalidate
-        // only the touched hosts' buckets, so steady-state view work
-        // stays ∝ touched buckets.
-        // Extras aggregate ONCE per batch (bucketed + materialized) —
-        // the per-bucket refreshes slice this frame instead of
-        // re-scanning the channels once per touched bucket.
-        val extras = FrontierLink.extrasCounts(registry,
-          extraLinksStreams, numBuckets)
-        // extras force-touch ONLY buckets with no frontier partition
-        // yet (first materialization — nothing recorded a signature to
-        // diff against); thereafter the graft_extras side signature
-        // drives refreshes on CHANGE. Unconditional force-touch would
-        // rewrite every extras-populated bucket every batch even when
-        // no channel changed — exactly the ∝-touched-buckets claim
-        // this link makes.
-        val extraTouched: Seq[Int] = extras
-          .map(_.select("bucket").distinct()
-            .collect().map(_.getInt(0)).toSeq
-            .filter(b => registry
-              .refreshPartitionMeta(frontierStream, b, "batch").isEmpty))
-          .getOrElse(Nil)
-        val sideSigs = FrontierLink.sideSignatures(registry, numBuckets,
-          hostKeyed = Seq(robotsStream, historyStream, reputationStream,
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val b = batch.select(col("url"), col("html")).localCheckpoint()
+    // audit writes are batch-partition REWRITES, not appends: a
+    // crash-replayed batch replaces its own batch=<id> directory,
+    // so the logs' contents stay exactly-once and the offline
+    // rebuild invariant counts == linkCounts(log) survives replay
+    registry.refreshPartition(crawledStream, batchId,
+      b.select(col("url")))
+    // crawled-SET merge: the distinct crawled urls, bucketed by the
+    // TARGET-side host hash (a crawled url evicts the count row
+    // whose link equals it — same registeredDomain, same bucket),
+    // merged per touched bucket with the count-table discipline so
+    // each frontier recompute anti-joins exactly one partition
+    val bcr = b.select(col("url")).distinct()
+      .withColumn("bucket", FrontierLink.bucketOf(
+        WebText.registeredDomain(col("url")), numBuckets))
+      .localCheckpoint()
+    val crawledTouched = registry.mergeBuckets(crawledSetName, bcr,
+      batchId)((old, slice) => old.unionByName(slice).distinct())
+    // ONE extraction per batch feeds both the audit log and the
+    // count merge (they must agree row-for-row)
+    val batchLinks = WebText.resolvedLinkRows(b, "url", "html")
+      .select(col("link")).localCheckpoint()
+    registry.refreshPartition(linksStream, batchId, batchLinks)
+    // incremental count merge, bucket by bucket: only the buckets
+    // the batch touches are read + rewritten; each bucket's _batch
+    // mark rides its own rotate, so a replay merges exactly the
+    // buckets whose merge hadn't landed (exactly-once per bucket)
+    val bc = FrontierLink.linkCounts(batchLinks)
+      .withColumn("bucket", FrontierLink.bucketOf(col("host"), numBuckets))
+      .localCheckpoint()
+    val touched = registry.mergeBuckets(countsName, bc, batchId) {
+      (old, slice) => old.unionByName(slice)
+        .groupBy("link", "host").agg(sum("inlinks").as("inlinks"))
+    }
+    // INCREMENTAL frontier refresh: only the buckets whose inputs
+    // changed can change rank — buckets the count merge touched,
+    // buckets of the batch's crawled hosts (their rows must leave
+    // the view), the extras' buckets, and — the side channel —
+    // every previously-refreshed bucket whose recorded PER-BUCKET
+    // side signature differs: a robots/history/hint/retry update
+    // affects hosts in buckets no link touched, and serving them
+    // stale until something else lands there would keep a fetcher
+    // scheduling now-disallowed or now-backed-off URLs. The
+    // signatures cost one scan per BOUNDED side stream per batch
+    // (the r14 whole-view refresh re-read them per batch too);
+    // bucket scope means the loop's own history appends invalidate
+    // only the touched hosts' buckets, so steady-state view work
+    // stays ∝ touched buckets.
+    // Extras aggregate ONCE per batch (bucketed + materialized) —
+    // the per-bucket refreshes slice this frame instead of
+    // re-scanning the channels once per touched bucket.
+    val extras = FrontierLink.extrasCounts(registry,
+      extraLinksStreams, numBuckets)
+    // extras force-touch ONLY buckets with no frontier partition
+    // yet (first materialization — nothing recorded a signature to
+    // diff against); thereafter the graft_extras side signature
+    // drives refreshes on CHANGE. Unconditional force-touch would
+    // rewrite every extras-populated bucket every batch even when
+    // no channel changed — exactly the ∝-touched-buckets claim
+    // this link makes.
+    val extraTouched: Seq[Int] = extras
+      .map(_.select("bucket").distinct()
+        .collect().map(_.getInt(0)).toSeq
+        .filter(b => registry
+          .refreshPartitionMeta(frontierStream, b, "batch").isEmpty))
+      .getOrElse(Nil)
+    val sideSigs = FrontierLink.sideSignatures(registry, numBuckets,
+      hostKeyed = Seq(robotsStream, historyStream, reputationStream,
+        retryStream, healthStream),
+      urlKeyed = Seq(hintsStream, datesStream), extras = extras)
+    val sideChanged: Seq[Int] = (0 until numBuckets).filter { bkt =>
+      registry.refreshPartitionMeta(frontierStream, bkt, "batch")
+        .isDefined &&
+        !registry.refreshPartitionMeta(frontierStream, bkt, "sides")
+          .contains(sideSigs(bkt))
+    }
+    val frontierTouched = (touched ++ crawledTouched ++
+      extraTouched ++ sideChanged).distinct.sorted
+    frontierTouched.foreach { bkt =>
+      val done = registry
+        .refreshPartitionMeta(frontierStream, bkt, "batch")
+        .exists(_.toLong >= batchId) &&
+        registry.refreshPartitionMeta(frontierStream, bkt, "sides")
+          .contains(sideSigs(bkt))
+      if (!done) {
+        registry.refreshPartition(frontierStream, bkt,
+          FrontierLink.refreshBucketPlanFrom(registry, countsName,
+            crawledSetName, bkt, extras, robotsStream,
+            historyStream, agent, topKPerDomain, defaultDelayMs,
+            hintsStream, datesStream, reputationStream, nowMs,
             retryStream, healthStream),
-          urlKeyed = Seq(hintsStream, datesStream), extras = extras)
-        val sideChanged: Seq[Int] = (0 until numBuckets).filter { bkt =>
-          registry.refreshPartitionMeta(frontierStream, bkt, "batch")
-            .isDefined &&
-            !registry.refreshPartitionMeta(frontierStream, bkt, "sides")
-              .contains(sideSigs(bkt))
-        }
-        val frontierTouched = (touched ++ crawledTouched ++
-          extraTouched ++ sideChanged).distinct.sorted
-        frontierTouched.foreach { bkt =>
-          val done = registry
-            .refreshPartitionMeta(frontierStream, bkt, "batch")
-            .exists(_.toLong >= batchId) &&
-            registry.refreshPartitionMeta(frontierStream, bkt, "sides")
-              .contains(sideSigs(bkt))
-          if (!done) {
-            registry.refreshPartition(frontierStream, bkt,
-              FrontierLink.refreshBucketPlanFrom(registry, countsName,
-                crawledSetName, bkt, extras, robotsStream,
-                historyStream, agent, topKPerDomain, defaultDelayMs,
-                hintsStream, datesStream, reputationStream, nowMs,
-                retryStream, healthStream),
-              Map("batch" -> batchId.toString,
-                "sides" -> sideSigs(bkt)))
-          }
-        }
+          Map("batch" -> batchId.toString,
+            "sides" -> sideSigs(bkt)))
       }
-      .start()
+    }
   }
 }
 

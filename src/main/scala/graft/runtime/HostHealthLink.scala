@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.ops.Robots
 
@@ -51,7 +50,7 @@ class HostHealthLink(input: String, healthStream: String,
                      numBuckets: Int = 16) extends Link {
   require(numBuckets >= 1, s"numBuckets >= 1, got $numBuckets")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: bucketed merges
+  val output: Option[String] = None // onBatch: bucketed merges
 
   private val healthSchema = StructType(Seq(
     StructField("host", StringType),
@@ -60,56 +59,42 @@ class HostHealthLink(input: String, healthStream: String,
     StructField("last_batch", LongType),
     StructField("bucket", IntegerType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = healthStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(healthStream, healthSchema, Seq("bucket"))
     registry.pinBucketCount(healthStream, numBuckets)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation",
-        registry.checkpointDir(name, healthStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch's partial aggregate: one row per touched host
-        // (map-side combined), plus the deterministic within-batch
-        // last_status = max status
-        val bh = batch.filter(col("host").isNotNull)
-          .groupBy("host")
-          .agg(count(lit(1)).as("n_fetches"),
-            sum(when(col("status_code") >= 500 ||
-              col("status_code") === 429, 1L).otherwise(0L))
-              .as("n_errors"),
-            max(col("status_code")).cast("int").as("last_status"))
-          .withColumn("last_batch", lit(batchId))
-          .withColumn("bucket",
-            StreamRegistry.bucketOf(col("host"), numBuckets))
-          .localCheckpoint()
-        // touched-bucket ids: bounded by numBuckets — control-plane
-        val touched = bh.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        touched.foreach { bkt =>
-          val merged = registry
-            .refreshPartitionMeta(healthStream, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!merged) {
-            registry.refreshPartition(healthStream, bkt,
-              registry.readPartition(healthStream, bkt)
-                .unionByName(bh.filter(col("bucket") === bkt)
-                  .drop("bucket"))
-                .groupBy("host")
-                .agg(sum("n_fetches").as("n_fetches"),
-                  sum("n_errors").as("n_errors"),
-                  max(struct(col("last_batch"), col("last_status")))
-                    .as("graft_last"))
-                .select(col("host"), col("n_fetches"), col("n_errors"),
-                  col("graft_last").getField("last_status")
-                    .as("last_status"),
-                  col("graft_last").getField("last_batch")
-                    .as("last_batch")),
-              Map("batch" -> batchId.toString))
-          }
-        }
-      }
-      .start()
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    // the batch's partial aggregate: one row per touched host
+    // (map-side combined), plus the deterministic within-batch
+    // last_status = max status
+    val bh = batch.filter(col("host").isNotNull)
+      .groupBy("host")
+      .agg(count(lit(1)).as("n_fetches"),
+        sum(when(col("status_code") >= 500 ||
+          col("status_code") === 429, 1L).otherwise(0L))
+          .as("n_errors"),
+        max(col("status_code")).cast("int").as("last_status"))
+      .withColumn("last_batch", lit(batchId))
+      .withColumn("bucket",
+        StreamRegistry.bucketOf(col("host"), numBuckets))
+      .localCheckpoint()
+    registry.mergeBuckets(healthStream, bh, batchId) { (old, slice) =>
+      old.unionByName(slice)
+        .groupBy("host")
+        .agg(sum("n_fetches").as("n_fetches"),
+          sum("n_errors").as("n_errors"),
+          max(struct(col("last_batch"), col("last_status")))
+            .as("graft_last"))
+        .select(col("host"), col("n_fetches"), col("n_errors"),
+          col("graft_last").getField("last_status")
+            .as("last_status"),
+          col("graft_last").getField("last_batch")
+            .as("last_batch"))
+    }
+    ()
   }
 }

@@ -25,7 +25,14 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    by design: Structured Streaming checkpoints commit per micro-batch
   *    exactly-once, which strictly dominates the reference's opt-out of
   *    its at-least-once commit; batch-granular side-effect control, the
-  *    one thing manual ack bought, is `foreachBatch` (SURVEY §2.1 O5).
+  *    one thing manual ack bought, is [[onBatch]] (SURVEY §2.1 O5).
+  *
+  * [[start]] is the ONE micro-batch path of the runtime (the reference's
+  * single consume → transform → emit → commit loop, `catenae.py:435-473`):
+  * `setup`, union the inputs, `transform`, then either the file sink into
+  * `output` or — `output = None` — a `foreachBatch` sink calling
+  * [[onBatch]]. A multi-stream link declares its streams in [[setup]] and
+  * writes them in [[onBatch]]; it never wires its own query.
   */
 trait Link {
   /** Link name ≈ receiver group (reference defaults it to the class name,
@@ -35,7 +42,7 @@ trait Link {
   /** Input stream names (uniform consume — union semantics, O2). */
   def inputs: Seq[String]
 
-  /** Default output stream (None ⇒ terminal sink link). */
+  /** Default output stream (None ⇒ the batch goes to [[onBatch]]). */
   def output: Option[String]
 
   /** The user transform — whole-DataFrame form so Catalyst optimizes it;
@@ -43,21 +50,39 @@ trait Link {
   def transform(df: DataFrame): DataFrame = df
 
   /** One-time hook before the query starts (reference `setup`,
-    * `catenae.py:285-287`). */
-  def setup(spark: SparkSession): Unit = {}
+    * `catenae.py:285-287`): declare and pin the streams [[onBatch]]
+    * writes, so a downstream link can attach before the first batch. */
+  def setup(spark: SparkSession, registry: StreamRegistry): Unit = {}
+
+  /** The micro-batch body of a link with `output = None` (the
+    * transformed batch and its id). The default is the terminal sink:
+    * force the batch so the transform's work runs (side effects,
+    * metrics) — an unmaterialized batch would silently discard the
+    * computation while offsets advance. Multi-stream links override it;
+    * the batch id is what keys their exactly-once rewrites. */
+  def onBatch(spark: SparkSession, registry: StreamRegistry,
+              batch: DataFrame, batchId: Long): Unit =
+    batch.foreach(_ => ())
+
+  /** The checkpoint's target name under `checkpoints/<name>/` — the
+    * default output, or `<name>_sink` for a terminal link. A link that
+    * writes other streams names the stream its checkpoint is kept for. */
+  def checkpointTarget: String = output.getOrElse(s"${name}_sink")
 
   /** Wire inputs → transform → output and start the streaming query
     * (reference `start()`, `catenae.py:262-314`; `embedded=True` ≈ just
     * not blocking on the returned query). */
   def start(spark: SparkSession, registry: StreamRegistry,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+    setup(spark, registry)
     // lenient union: the reference's streams are schemaless — columns
     // missing from one input surface as nulls rather than failing the wire
     val in = inputs.map(registry.readStream)
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val out = transform(in)
-    val target = output.getOrElse(s"${name}_sink")
+    val writer = out.writeStream
+      .option("checkpointLocation", registry.checkpointDir(name, checkpointTarget))
+      .trigger(trigger)
     output match {
       case Some(stream) =>
         // declare so a downstream link can attach before our first batch.
@@ -68,21 +93,13 @@ trait Link {
         // refuses them on sink-owned directories. Fan-in topologies give
         // each producer its own stream and union at the consumer.
         registry.declare(stream, out.schema)
-        out.writeStream
-          .option("checkpointLocation", registry.checkpointDir(name, target))
-          .trigger(trigger)
-          .format(registry.format)
+        writer.format(registry.format)
           .option("path", s"${registry.root}/streams/$stream")
           .start()
       case None =>
-        // Terminal link: still force the batch so the transform's work runs
-        // (side effects, metrics) — an unmaterialized batch would silently
-        // discard the computation while offsets advance.
-        out.writeStream
-          .option("checkpointLocation", registry.checkpointDir(name, target))
-          .trigger(trigger)
-          .foreachBatch { (batch: DataFrame, _: Long) => batch.foreach(_ => ()) }
-          .start()
+        writer.foreachBatch { (batch: DataFrame, batchId: Long) =>
+          onBatch(spark, registry, batch, batchId)
+        }.start()
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.ops.WebText
 
@@ -25,10 +24,10 @@ class MainContentLink(input: String, outputStream: String,
                       minChars: Int = 80,
                       maxLinkMicros: Long = 500000L) extends Link {
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: declared + written below
+  val output: Option[String] = None // onBatch: declared + written below
 
   // static output shape of WebText.mainContent — declared upfront in
-  // start() (the NearDupGateLink precedent) so a downstream link that
+  // setup() (the NearDupGateLink precedent) so a downstream link that
   // attaches before the first non-empty batch, or an empty input, never
   // hits StreamNotFoundError
   private val outSchema = StructType(Seq(
@@ -36,18 +35,15 @@ class MainContentLink(input: String, outputStream: String,
     StructField("n_kept", LongType), StructField("n_chars_kept", LongType),
     StructField("main_text", StringType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = outputStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit =
     registry.declare(outputStream, outSchema)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, outputStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = WebText.mainContent(batch, minChars = minChars,
-          maxLinkMicros = maxLinkMicros)
-        registry.write(out, outputStream)
-      }
-      .start()
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val out = WebText.mainContent(batch, minChars = minChars,
+      maxLinkMicros = maxLinkMicros)
+    registry.write(out, outputStream)
   }
 }

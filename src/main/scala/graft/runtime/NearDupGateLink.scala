@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import graft.ops.Dedup
 
@@ -71,9 +70,9 @@ class NearDupGateLink(input: String, corpusStream: String,
   private val bandSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("band", LongType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = pairsStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(pairsStream, pairsSchema)
     val seedCorpus = registry.exists(corpusStream)
     if (!seedCorpus) registry.declare(corpusStream, docSchema)
@@ -86,26 +85,24 @@ class NearDupGateLink(input: String, corpusStream: String,
           registry.write(Dedup.minHashBandProjection(seed, n), bandsStream)
       }
     }
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, pairsStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // localCheckpoint both: the pairs feed TWO actions (pairs append +
-        // survivor anti-join), and the survivor write must not re-list the
-        // corpus directory it is itself about to append to
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
-        val corpus = registry.read(corpusStream)
-        val corpusBands = registry.read(bandsStream)
-        val pairs = Dedup.minHashLshAgainstCorpusBanded(corpus, corpusBands,
-          b, minJaccard, n, maxBandSize).localCheckpoint()
-        registry.write(pairs, pairsStream)
-        val survivors = b.join(
-          pairs.select(col("doc_new").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-        // bands FIRST (see at-least-once ordering note in the scaladoc)
-        registry.write(Dedup.minHashBandProjection(survivors, n), bandsStream)
-        registry.write(survivors, corpusStream)
-      }
-      .start()
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    // localCheckpoint both: the pairs feed TWO actions (pairs append +
+    // survivor anti-join), and the survivor write must not re-list the
+    // corpus directory it is itself about to append to
+    val b = batch.select(col("doc_id"), col("text")).localCheckpoint()
+    val corpus = registry.read(corpusStream)
+    val corpusBands = registry.read(bandsStream)
+    val pairs = Dedup.minHashLshAgainstCorpusBanded(corpus, corpusBands,
+      b, minJaccard, n, maxBandSize).localCheckpoint()
+    registry.write(pairs, pairsStream)
+    val survivors = b.join(
+      pairs.select(col("doc_new").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti").localCheckpoint()
+    // bands FIRST (see at-least-once ordering note in the scaladoc)
+    registry.write(Dedup.minHashBandProjection(survivors, n), bandsStream)
+    registry.write(survivors, corpusStream)
   }
 }

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 import graft.ops.Warc
 
@@ -50,7 +49,7 @@ class RevisitGateLink(input: String, outputStream: String,
                       date: String = "2026-01-01T00:00:00Z") extends Link {
   require(numBuckets >= 1, s"numBuckets >= 1, got $numBuckets")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: output + state streams
+  val output: Option[String] = None // onBatch: output + state streams
 
   private val outSchema = StructType(Seq(
     StructField("url", StringType), StructField("digest", StringType),
@@ -62,86 +61,74 @@ class RevisitGateLink(input: String, outputStream: String,
     StructField("digest", StringType), StructField("first_url", StringType),
     StructField("first_batch", LongType), StructField("bucket", IntegerType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = outputStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(outputStream, outSchema, Seq("batch"))
     registry.declare(seenStream, seenSchema, Seq("bucket"))
     registry.pinBucketCount(seenStream, numBuckets)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, outputStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        // within-batch capture rank per digest (1 = the batch's first;
-        // identical duplicate rows rank arbitrarily among themselves,
-        // where either labeling yields the same output set)
-        val wDigest = Window.partitionBy("digest").orderBy(col("url").asc)
-        val b = batch
-          .filter(col(textCol).isNotNull && col(uriCol).isNotNull)
-          .select(col(uriCol).as("url"), col(textCol).as("text"))
-          .withColumn("digest", md5(encode(col("text"), "UTF-8")))
-          .withColumn("bucket",
-            StreamRegistry.bucketOf(col("digest"), numBuckets))
-          .withColumn("graft_rn", row_number().over(wDigest))
-          .withColumn("graft_batch_first",
-            min(col("url")).over(Window.partitionBy("digest")))
-          .localCheckpoint()
-        // touched-bucket ids: bounded by numBuckets — control-plane
-        val touched = b.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        // prior state for the touched buckets only (bucket-pruned);
-        // rows a crashed attempt of THIS batch merged are filtered so
-        // a replay labels the output identically. Deliberately LAZY:
-        // both consumers (the output join, the fresh anti-join)
-        // evaluate BEFORE any seenStream rotate, so the reads are
-        // consistent, column-pruned, and never materialize the whole
-        // digest registry per batch
-        val prior = touched.map(bkt =>
-            registry.readPartition(seenStream, bkt)).reduceOption(_ unionByName _)
-          .getOrElse(registry.readPartition(seenStream, 0).limit(0))
-          .filter(col("first_batch") < batchId)
-        // revisit detection is by DIGEST rank: a prior capture (any
-        // url, any batch) or a lower-ranked same-batch sibling makes
-        // this row a stub — never url inequality, which would store a
-        // same-url recrawl's payload twice
-        val joined = b.join(prior.select(col("digest"),
-            col("first_url").as("graft_prior")), Seq("digest"), "left")
-          .withColumn("is_revisit",
-            col("graft_prior").isNotNull || col("graft_rn") > 1)
-          .withColumn("refers_to", when(col("is_revisit"),
-            coalesce(col("graft_prior"), col("graft_batch_first")))
-            .otherwise(lit("")))
-        val out = joined.select(col("url"), col("digest"),
-          col("is_revisit"), col("refers_to"),
-          when(col("is_revisit"), Warc.revisitStub(col("url"),
-              col("refers_to"), col("digest"), lit(date)))
-            .otherwise(Warc.responseRecord(col("url"), col("text"),
-              lit(date))).as("warc_record"))
-        // batch-partition REWRITE: a replayed batch replaces its own
-        // directory — the archive output is exactly-once, not merely
-        // the state
-        registry.refreshPartition(outputStream, batchId, out)
-        // merge genuinely NEW digests into exactly the buckets that
-        // gained one (a steady-state recrawl batch merges nothing)
-        val fresh = b.filter(col("graft_rn") === 1)
-          .join(prior.select("digest"), Seq("digest"), "left_anti")
-          .select(col("digest"), col("url").as("first_url"),
-            lit(batchId).as("first_batch"), col("bucket"))
-          .localCheckpoint()
-        val gained = fresh.select("bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        gained.foreach { bkt =>
-          val merged = registry.refreshPartitionMeta(seenStream, bkt, "batch")
-            .exists(_.toLong >= batchId)
-          if (!merged) {
-            registry.refreshPartition(seenStream, bkt,
-              registry.readPartition(seenStream, bkt).unionByName(
-                fresh.filter(col("bucket") === bkt).drop("bucket")),
-              Map("batch" -> batchId.toString))
-          }
-        }
-      }
-      .start()
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    // within-batch capture rank per digest (1 = the batch's first;
+    // identical duplicate rows rank arbitrarily among themselves,
+    // where either labeling yields the same output set)
+    val wDigest = Window.partitionBy("digest").orderBy(col("url").asc)
+    val b = batch
+      .filter(col(textCol).isNotNull && col(uriCol).isNotNull)
+      .select(col(uriCol).as("url"), col(textCol).as("text"))
+      .withColumn("digest", md5(encode(col("text"), "UTF-8")))
+      .withColumn("bucket",
+        StreamRegistry.bucketOf(col("digest"), numBuckets))
+      .withColumn("graft_rn", row_number().over(wDigest))
+      .withColumn("graft_batch_first",
+        min(col("url")).over(Window.partitionBy("digest")))
+      .localCheckpoint()
+    // touched-bucket ids: bounded by numBuckets — control-plane
+    val touched = b.select("bucket").distinct()
+      .collect().map(_.getInt(0)).sorted
+    // prior state for the touched buckets only (bucket-pruned);
+    // rows a crashed attempt of THIS batch merged are filtered so
+    // a replay labels the output identically. Deliberately LAZY:
+    // both consumers (the output join, the fresh anti-join)
+    // evaluate BEFORE any seenStream rotate, so the reads are
+    // consistent, column-pruned, and never materialize the whole
+    // digest registry per batch
+    val prior = touched.map(bkt =>
+        registry.readPartition(seenStream, bkt)).reduceOption(_ unionByName _)
+      .getOrElse(registry.readPartition(seenStream, 0).limit(0))
+      .filter(col("first_batch") < batchId)
+    // revisit detection is by DIGEST rank: a prior capture (any
+    // url, any batch) or a lower-ranked same-batch sibling makes
+    // this row a stub — never url inequality, which would store a
+    // same-url recrawl's payload twice
+    val joined = b.join(prior.select(col("digest"),
+        col("first_url").as("graft_prior")), Seq("digest"), "left")
+      .withColumn("is_revisit",
+        col("graft_prior").isNotNull || col("graft_rn") > 1)
+      .withColumn("refers_to", when(col("is_revisit"),
+        coalesce(col("graft_prior"), col("graft_batch_first")))
+        .otherwise(lit("")))
+    val out = joined.select(col("url"), col("digest"),
+      col("is_revisit"), col("refers_to"),
+      when(col("is_revisit"), Warc.revisitStub(col("url"),
+          col("refers_to"), col("digest"), lit(date)))
+        .otherwise(Warc.responseRecord(col("url"), col("text"),
+          lit(date))).as("warc_record"))
+    // batch-partition REWRITE: a replayed batch replaces its own
+    // directory — the archive output is exactly-once, not merely
+    // the state
+    registry.refreshPartition(outputStream, batchId, out)
+    // merge genuinely NEW digests into exactly the buckets that
+    // gained one (a steady-state recrawl batch merges nothing)
+    val fresh = b.filter(col("graft_rn") === 1)
+      .join(prior.select("digest"), Seq("digest"), "left_anti")
+      .select(col("digest"), col("url").as("first_url"),
+        lit(batchId).as("first_batch"), col("bucket"))
+      .localCheckpoint()
+    registry.mergeBuckets(seenStream, fresh, batchId)(_ unionByName _)
+    ()
   }
 }

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.WebText
 
 /** Streaming per-PAGE robots admission — the q266 combined gate
@@ -42,30 +41,24 @@ class RobotsPageGateLink(input: String, corpusStream: String,
                          payloadCol: String = "payload",
                          agent: String = "graftbot") extends Link {
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: the two splits below
+  val output: Option[String] = None // onBatch: the two splits below
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation",
-        registry.checkpointDir(name, corpusStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val gated = RobotsPageGateLink.gate(batch, htmlCol,
-          payloadCol, agent).localCheckpoint()
-        def declareAndWrite(stream: String, df: DataFrame): Unit = {
-          val out = df.drop("noindex", "nofollow")
-          if (!registry.exists(stream))
-            registry.declare(stream,
-              out.schema.add("batch",
-                org.apache.spark.sql.types.LongType), Seq("batch"))
-          registry.refreshPartition(stream, batchId, out)
-        }
-        declareAndWrite(corpusStream, gated.filter(!col("noindex")))
-        declareAndWrite(frontierStream, gated.filter(!col("nofollow")))
-      }
-      .start()
+  override def checkpointTarget: String = corpusStream
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val gated = RobotsPageGateLink.gate(batch, htmlCol,
+      payloadCol, agent).localCheckpoint()
+    def declareAndWrite(stream: String, df: DataFrame): Unit = {
+      val out = df.drop("noindex", "nofollow")
+      if (!registry.exists(stream))
+        registry.declare(stream,
+          out.schema.add("batch",
+            org.apache.spark.sql.types.LongType), Seq("batch"))
+      registry.refreshPartition(stream, batchId, out)
+    }
+    declareAndWrite(corpusStream, gated.filter(!col("noindex")))
+    declareAndWrite(frontierStream, gated.filter(!col("nofollow")))
   }
 }
 

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 import graft.ops.Warc
 
@@ -56,7 +55,7 @@ class SegmentExportLink(input: String, segmentsStream: String,
     s"filenamePattern needs exactly one {} segment-id slot, got " +
       s"'$filenamePattern'")
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: two streams below
+  val output: Option[String] = None // onBatch: two streams below
 
   private val segSchema = StructType(Seq(
     StructField("chunk_id", LongType), StructField("payload", BinaryType),
@@ -66,39 +65,36 @@ class SegmentExportLink(input: String, segmentsStream: String,
     StructField("rec_idx", LongType), StructField("cdxj_line", StringType),
     StructField("batch", LongType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = segmentsStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
     registry.declare(segmentsStream, segSchema, Seq("batch"))
     registry.declare(indexStream, idxSchema, Seq("batch"))
+  }
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
     val Array(pre, post) = filenamePattern.split("\\{\\}", -1)
-    registry.readStream(input).writeStream
-      .option("checkpointLocation",
-        registry.checkpointDir(name, segmentsStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val recs = Warc.wetRecords(batch, uriCol, textCol, lit(date))
-          .withColumn("graft_shard",
-            lit(batchId * shardsPerBatch) +
-              pmod(xxhash64(col(uriCol)), lit(shardsPerBatch.toLong)))
-        val packed = Warc.packSegments(recs, shardCol = "graft_shard",
-          ordCol = uriCol, recCol = "wet_record",
-          targetSegmentBytes = targetSegmentBytes)
-        val payloads =
-          (if (gzip) Warc.segmentPayloadsGzip(spark, packed, "wet_record")
-           else Warc.segmentPayloads(packed, "wet_record"))
-            .localCheckpoint()
-        registry.refreshPartition(segmentsStream, batchId, payloads)
-        // locators from the WRITTEN payloads (correct for either
-        // layout — compressed member spans included)
-        val index = Warc.cdxjLines(
-            Warc.parseWarcIndex(spark, payloads),
-            filename = concat(lit(pre), col("chunk_id").cast("string"),
-              lit(post)),
-            timestamp = lit(timestamp))
-          .select("urlkey", "chunk_id", "rec_idx", "cdxj_line")
-        registry.refreshPartition(indexStream, batchId, index)
-      }
-      .start()
+    val recs = Warc.wetRecords(batch, uriCol, textCol, lit(date))
+      .withColumn("graft_shard",
+        lit(batchId * shardsPerBatch) +
+          pmod(xxhash64(col(uriCol)), lit(shardsPerBatch.toLong)))
+    val packed = Warc.packSegments(recs, shardCol = "graft_shard",
+      ordCol = uriCol, recCol = "wet_record",
+      targetSegmentBytes = targetSegmentBytes)
+    val payloads =
+      (if (gzip) Warc.segmentPayloadsGzip(spark, packed, "wet_record")
+       else Warc.segmentPayloads(packed, "wet_record"))
+        .localCheckpoint()
+    registry.refreshPartition(segmentsStream, batchId, payloads)
+    // locators from the WRITTEN payloads (correct for either
+    // layout — compressed member spans included)
+    val index = Warc.cdxjLines(
+        Warc.parseWarcIndex(spark, payloads),
+        filename = concat(lit(pre), col("chunk_id").cast("string"),
+          lit(post)),
+        timestamp = lit(timestamp))
+      .select("urlkey", "chunk_id", "rec_idx", "cdxj_line")
+    registry.refreshPartition(indexStream, batchId, index)
   }
 }

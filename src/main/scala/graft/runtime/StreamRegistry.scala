@@ -493,6 +493,33 @@ class StreamRegistry(spark: SparkSession, val root: String,
     readTextIfExists(s"${streamDir(name)}/${parts.head}=$partValue/_$key")
   }
 
+  /** EXACTLY-ONCE per-bucket merge of one micro-batch into a bucketed
+    * [[refreshPartition]] table — the count-store discipline every
+    * bucketed link shares. `staged` is the batch's rows plus their
+    * `bucket` column; its touched bucket ids are collected (bounded by
+    * the modulus — control-plane). A bucket whose `_batch` mark is
+    * already ≥ `batchId` is skipped: a crashed attempt of this batch
+    * landed that merge. Every other bucket rotates to
+    * `merge(current partition, the batch's slice without bucket)`, and
+    * the new mark rides the same rotate. Returns the touched bucket
+    * ids, sorted — skipped ones included. */
+  def mergeBuckets(name: String, staged: DataFrame, batchId: Long)(
+      merge: (DataFrame, DataFrame) => DataFrame): Seq[Int] = {
+    import org.apache.spark.sql.functions.col
+    val touched = staged.select("bucket").distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    touched.foreach { bkt =>
+      val merged = refreshPartitionMeta(name, bkt, "batch")
+        .exists(_.toLong >= batchId)
+      if (!merged)
+        refreshPartition(name, bkt,
+          merge(readPartition(name, bkt),
+            staged.filter(col("bucket") === bkt).drop("bucket")),
+          Map("batch" -> batchId.toString))
+    }
+    touched
+  }
+
   /** Atomically claim a stream name: create-exclusive write of the schema
     * file, so exactly ONE caller across processes succeeds and every
     * other racer gets `FileAlreadyExistsException` — the fence for

@@ -2,7 +2,6 @@ package graft.runtime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.ops.Warc
 
@@ -30,25 +29,22 @@ class WatExportLink(input: String, outputStream: String,
                     contentTypeCol: String = "",
                     date: String = "2026-01-01T00:00:00Z") extends Link {
   val inputs: Seq[String] = Seq(input)
-  val output: Option[String] = None // custom start: declared + written below
+  val output: Option[String] = None // onBatch: declared + written below
 
   private val outSchema = StructType(Seq(
     StructField("url", StringType), StructField("wat_record", StringType),
     StructField("batch", LongType)))
 
-  override def start(spark: SparkSession, registry: StreamRegistry,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    setup(spark)
+  override def checkpointTarget: String = outputStream
+
+  override def setup(spark: SparkSession, registry: StreamRegistry): Unit =
     registry.declare(outputStream, outSchema, Seq("batch"))
-    registry.readStream(input).writeStream
-      .option("checkpointLocation", registry.checkpointDir(name, outputStream))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = Warc.watRecords(batch, uriCol, htmlCol, contentTypeCol,
-            lit(date))
-          .select(col(uriCol).as("url"), col("wat_record"))
-        registry.refreshPartition(outputStream, batchId, out)
-      }
-      .start()
+
+  override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                       batch: DataFrame, batchId: Long): Unit = {
+    val out = Warc.watRecords(batch, uriCol, htmlCol, contentTypeCol,
+        lit(date))
+      .select(col(uriCol).as("url"), col("wat_record"))
+    registry.refreshPartition(outputStream, batchId, out)
   }
 }

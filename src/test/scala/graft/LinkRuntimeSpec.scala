@@ -127,6 +127,43 @@ class LinkRuntimeSpec extends SparkSpec {
     assert(out === Seq("m1", "m2", "m3")) // m1/m2 not re-emitted
   }
 
+  test("a Link with output = None writes two streams from onBatch; " +
+    "restarting on its checkpoint appends nothing") {
+    val reg = freshRegistry()
+    object Split extends Link {
+      val inputs = Seq("split_in")
+      val output: Option[String] = None
+      override def checkpointTarget: String = "split_short"
+      override def setup(spark: SparkSession, registry: StreamRegistry): Unit = {
+        val schema = registry.schemaOf("split_in")
+        registry.declare("split_short", schema)
+        registry.declare("split_long", schema)
+      }
+      override def onBatch(spark: SparkSession, registry: StreamRegistry,
+                           batch: DataFrame, batchId: Long): Unit = {
+        registry.write(batch.filter(length(col("value")) <= 2), "split_short")
+        registry.write(batch.filter(length(col("value")) > 2), "split_long")
+      }
+    }
+    def contents(stream: String): Seq[String] =
+      reg.read(stream).collect().map(_.getString(0)).sorted.toSeq
+    reg.write(msgs("a", "bb", "ccc", "dddd"), "split_in")
+    Split.start(spark, reg).awaitTermination()
+    assert(contents("split_short") === Seq("a", "bb"))
+    assert(contents("split_long") === Seq("ccc", "dddd"))
+    // same checkpoint, no new input: the batch is not replayed
+    Split.start(spark, reg).awaitTermination()
+    assert(contents("split_short") === Seq("a", "bb"))
+    assert(contents("split_long") === Seq("ccc", "dddd"))
+    assert(new java.io.File(reg.checkpointDir(Split.name, "split_short"),
+      "commits").exists())
+    // new input resumes after the committed batch
+    reg.write(msgs("e"), "split_in")
+    Split.start(spark, reg).awaitTermination()
+    assert(contents("split_short") === Seq("a", "bb", "e"))
+    assert(contents("split_long") === Seq("ccc", "dddd"))
+  }
+
   test("RPC: whitelist, addressing, broadcast, and self-skip (O6/O7)") {
     val reg = freshRegistry()
     val aCalls = new java.util.concurrent.ConcurrentLinkedQueue[String]()

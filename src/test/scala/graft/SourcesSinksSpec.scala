@@ -212,6 +212,45 @@ class SourcesSinksSpec extends SparkSpec {
     intercept[IllegalArgumentException] { reg.pinBucketCount("pc", 32) }
   }
 
+  test("mergeBuckets: a replayed batch id rewrites no bucket, a later " +
+    "batch id merges again") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+      StructField, StructType}
+    val s = spark
+    import s.implicits._
+    val reg = new StreamRegistry(spark,
+      Files.createTempDirectory("graft-mergebk").toString)
+    reg.declare("mb", StructType(Seq(StructField("k", StringType),
+      StructField("n", LongType), StructField("bucket", IntegerType))),
+      Seq("bucket"))
+    def sumMerge(old: DataFrame, slice: DataFrame): DataFrame =
+      old.unionByName(slice).groupBy("k").agg(sum("n").as("n"))
+    def files(b: Int): Set[String] =
+      new java.io.File(s"${reg.root}/streams/mb/bucket=$b").listFiles()
+        .map(_.getName).toSet
+    def bucket(b: Int): Map[String, Long] =
+      reg.readPartition("mb", b).as[(String, Long)].collect().toMap
+    val batch1 = Seq(("a", 1L, 0), ("b", 2L, 3), ("c", 4L, 3))
+      .toDF("k", "n", "bucket")
+    assert(reg.mergeBuckets("mb", batch1, 1L)(sumMerge) === Seq(0, 3))
+    assert(bucket(0) === Map("a" -> 1L))
+    assert(bucket(3) === Map("b" -> 2L, "c" -> 4L))
+    val (b0, b3) = (files(0), files(3))
+    // replay of batch 1: the touched ids come back, but every bucket's
+    // mark already covers the batch — nothing rotates, nothing doubles
+    assert(reg.mergeBuckets("mb", batch1, 1L)(sumMerge) === Seq(0, 3))
+    assert(files(0) === b0 && files(3) === b3)
+    assert(bucket(0) === Map("a" -> 1L))
+    // a later batch merges into the bucket it touches, and only there
+    assert(reg.mergeBuckets("mb", Seq(("a", 5L, 0)).toDF("k", "n", "bucket"),
+      2L)(sumMerge) === Seq(0))
+    assert(bucket(0) === Map("a" -> 6L))
+    assert(files(3) === b3)
+    assert(reg.refreshPartitionMeta("mb", 0, "batch") === Some("2"))
+    assert(reg.refreshPartitionMeta("mb", 3, "batch") === Some("1"))
+  }
+
   test("recover deletes a stale .old left by a crash AFTER the swap") {
     val reg = new StreamRegistry(spark, Files.createTempDirectory("graft-rec").toString)
     val s = spark
