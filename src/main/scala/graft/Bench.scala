@@ -1,19 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-/** Whole-registry bench: per-query median seconds as JSON lines. Also
-  * the one home of the measurement mains' shared pieces — the session
-  * ([[session]]), the table warm-up and the median — which [[Profile]],
-  * [[Explain]] and [[Verify]] reuse. */
+/** The one measurement main: `runMain graft.Bench [mode]`.
+  *
+  *  - `bench` (the default): whole-registry bench — per-query median
+  *    seconds and stage metrics as JSON lines, the full line also in
+  *    `bench_last.json`, a ~200-char total-only line last.
+  *  - `profile`: the same rep loop, printed as a per-query table.
+  *  - `explain`: the formatted physical plan of each query.
+  *  - `catalog`: the query catalog (name, oracle status) as markdown.
+  *
+  * Every mode reads the fixture dir from `SPARK_GRAFT_SF_DIR` (default
+  * sf0.1) and runs the queries [[selected]] picks; the session-building
+  * modes share [[session]], and the timed modes [[warmTables]] first.
+  * [[Verify]] reuses the session and the selection rule. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Scheduler-level shape of one query rep: jobs, stages, tasks, summed
+    * executor run time and shuffle bytes, as a SparkListener saw them. */
+  final case class StageStats(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
+                              execRunMs: Long = 0, shuffleRead: Long = 0,
+                              shuffleWrite: Long = 0)
+
+  /** One query's measurement: every rep's seconds (−1 = failed rep) and
+    * the last rep's [[StageStats]]. */
+  final case class Result(name: String, runs: Seq[Double], stats: StageStats) {
+    private val ok = runs.filter(_ >= 0)
+    val median: Double = if (ok.isEmpty) -1.0 else Bench.median(ok)
+    val min: Double = if (ok.isEmpty) -1.0 else ok.min
+    def failed: Boolean = runs.exists(_ < 0)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
-    warmTables(spark, sfDir)
-    // Force with a real sink (noop write materializes every column +
-    // expression, unlike count() which lets Catalyst prune the plan).
-    // Dev filter: SPARK_GRAFT_ONLY=q34_simhash,q38_quantiles benches a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Window-proofing: a single-run bench is hostage to shared-host noise
     // bursts (round 7 measured run-order-contiguous 3-13x inflation on
     // queries that bench 1x in isolation). Run each query REPS times
@@ -21,86 +45,151 @@ object Bench {
     // a noise burst must now straddle all repetitions of a query to move
     // its score. Min and the raw runs are kept alongside for analysis.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = selected.map { case (name, fn) =>
-      // A failed query records -1.0 (sentinel), never its partial elapsed
-      // time — a broken query must not silently deflate the total.
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val r = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] FAILED $name: $e")
-          -1.0
+    args.headOption.getOrElse("bench") match {
+      case "bench" =>
+        val out = lines(measure(sfDir, reps), reps, sfDir)
+        out.foreach(println)
+        // A caller may keep only a bounded tail of stdout — the full line
+        // goes to a file so regression analysis always has every query.
+        try java.nio.file.Files.writeString(
+          java.nio.file.Paths.get("bench_last.json"), out.head + "\n")
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] could not write bench_last.json: $e")
         }
-        // r17 measurement fix (VERDICT r16 "Next round" #8): a few
-        // operators persist() model tables inside lazy builders with no
-        // in-operator unpersist point, so rep 2..N reused rep 1's cached
-        // blocks ("Asked to cache already cached data" in every past
-        // bench log) — flattering those queries' medians and holding
-        // executor memory across the whole run. Dropping leaked cache
-        // entries BETWEEN reps (outside the timed region) makes every
-        // rep compute from the parquet inputs. Expect some medians to
-        // rise vs r16 — that is the honest number.
-        spark.catalog.clearCache()
-        r
-      }
-      val ok = runs.filter(_ >= 0)
-      val med = if (ok.isEmpty) -1.0 else median(ok)
-      val min = if (ok.isEmpty) -1.0 else ok.min
-      (name, med, min, runs)
+      case "profile" => printProfile(measure(sfDir, reps))
+      case "explain" =>
+        val spark = session()
+        selected().foreach { case (name, fn) =>
+          println(s"===== $name =====")
+          fn(spark, sfDir).explain("formatted")
+        }
+        spark.stop()
+      case "catalog" => catalog()
+      case other => throw new IllegalArgumentException(
+        s"unknown mode '$other': expected bench, profile, explain or catalog")
     }
+  }
+
+  /** The rep loop of `bench` and `profile`: warm up, then `reps` timed
+    * reps of every selected query, with the last rep's stage metrics. */
+  private def measure(sfDir: String, reps: Int): Seq[Result] = {
+    val spark = session()
+    val stats = new StageListener
+    spark.sparkContext.addSparkListener(stats)
+    warmTables(spark, sfDir)
+    val runs = selected().map { case (name, fn) =>
+      name -> (1 to reps).map(timeRep(spark, sfDir, name, _, fn))
+    }
+    // stop() drains the listener bus: every stage event is in before
+    // the totals are read
+    try spark.stop() catch { case NonFatal(_) => () }
+    runs.map { case (name, rs) => Result(name, rs, stats.of(repGroup(name, reps))) }
+  }
+
+  /** One timed rep: a noop write (materializes every column + expression,
+    * unlike count() which lets Catalyst prune the plan) under job group
+    * [[repGroup]], so the listener can attribute its stages. A failed rep
+    * records −1.0 (sentinel), never its partial elapsed time — a broken
+    * query must not silently deflate the total. */
+  private def timeRep(spark: SparkSession, sfDir: String, name: String,
+                      rep: Int, fn: Query): Double = {
+    spark.sparkContext.setJobGroup(repGroup(name, rep), name)
+    val t0 = System.nanoTime()
+    val r = try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] FAILED $name: $e")
+      -1.0
+    }
+    // backstop, untimed: a leaked cache entry must not feed the next rep
+    spark.catalog.clearCache()
+    r
+  }
+
+  private def repGroup(name: String, rep: Int): String = s"$name#$rep"
+
+  /** Per-job-group [[StageStats]]: jobs are counted at start, stages and
+    * tasks at completion, attributed through the group their submitting
+    * job carried. Events arrive on the one listener-bus thread; read
+    * [[of]] only after `spark.stop()` has drained it. */
+  private class StageListener extends SparkListener {
+    private val stageGroup = mutable.HashMap.empty[Int, String]
+    private val byGroup = mutable.HashMap.empty[String, StageStats]
+    private def group(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(q => Option(q.getProperty("spark.jobGroup.id")))
+    private def add(g: String)(f: StageStats => StageStats): Unit =
+      byGroup(g) = f(byGroup.getOrElse(g, StageStats()))
+    def of(g: String): StageStats = byGroup.getOrElse(g, StageStats())
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      group(j.properties).foreach(add(_)(s => s.copy(jobs = s.jobs + 1)))
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+      group(s.properties).foreach(stageGroup(s.stageInfo.stageId) = _)
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+      val i = sc.stageInfo
+      stageGroup.remove(i.stageId).foreach(add(_)(s => s.copy(
+        stages = s.stages + 1, tasks = s.tasks + i.numTasks,
+        execRunMs = s.execRunMs + i.taskMetrics.executorRunTime,
+        shuffleRead = s.shuffleRead + i.taskMetrics.shuffleReadMetrics.totalBytesRead,
+        shuffleWrite = s.shuffleWrite + i.taskMetrics.shuffleWriteMetrics.bytesWritten)))
+    }
+  }
+
+  /** The bench's three JSON lines, in print order:
+    *  1. full detail — medians, plus per query its median, min, runs and
+    *     last-rep stage metrics (also the `bench_last.json` content);
+    *  2. medians only, rounded to ms (display precision only);
+    *  3. total only (~200 chars, no per-query map — a SUBSET map could
+    *     misread as dropped queries), last, because a caller that keeps a
+    *     2000-char tail of the output cannot fit 271 query names (~7 KB).
+    * `value` sums the medians of queries with at least one good rep;
+    * `n_failed` counts a query with ANY failed rep: its median rests on
+    * fewer runs than the rest. */
+  def lines(results: Seq[Result], reps: Int, sfDir: String): Seq[String] = {
     val sf = Json.quote(sfDir)
-    val qs = results.map { case (k, med, _, _) => Json.quote(k) + ":" + med }
-      .mkString("{", ",", "}")
-    val detail = results.map { case (k, med, min, runs) =>
-      Json.quote(k) + ":{\"median\":" + med + ",\"min\":" + min +
-        ",\"runs\":" + runs.mkString("[", ",", "]") + "}"
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum // failures (-1) excluded
-    val totalMin = results.map(_._3).filter(_ >= 0).sum
-    val json =
-      s"""{"metric":"total_of_medians","value":$total,"unit":"sec","reps":$reps,"total_min":$totalMin,"queries":$qs,"queries_detail":$detail,"sf":$sf}"""
-    println(json)
-    // The driver keeps only a bounded tail of stdout, which truncated
-    // half the per-query numbers in past rounds — persist the full JSON
-    // to a file too so regression analysis always has every query.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_last.json"), json + "\n")
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not write bench_last.json: $e")
-    }
-    // r17 measurement fix (VERDICT r16 "Next round" #2b): the detail line
-    // above outgrew the driver's bounded stdout tail, so its parser saw a
-    // line truncated from the front every round. Print a compact
-    // medians-only summary (same metric/value/unit/queries/sf contract,
-    // medians rounded to ms — display precision only, the full-precision
-    // numbers stay in the detail line and bench_last.json) as the LAST
-    // stdout line so front-truncation eats the detail line, not this one.
+    val total = results.map(_.median).filter(_ >= 0).sum
+    val totalMin = results.map(_.min).filter(_ >= 0).sum
     def ms(x: Double): String =
       if (x < 0) "-1" else BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qsCompact = results.map { case (k, med, _, _) => Json.quote(k) + ":" + ms(med) }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total_of_medians","value":${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"queries":$qsCompact,"sf":$sf}""")
-    // Second r17 measurement-contract fix, declared in OPTIMIZATION_r17.md:
-    // every recorded BENCH_r*.json stores a tail of EXACTLY 2000 chars of
-    // combined output, and 271 query names alone run ~7 KB — so even the
-    // compact medians line above cannot survive front-truncation. Print a
-    // total-only summary (~200 chars, no per-query map — a SUBSET map
-    // could misread as dropped queries) as the last line we print, after
-    // spark.stop() so little shutdown logging lands behind it (shutdown
-    // hooks and sbt trailers still can — a reader must scan the tail
-    // for the last JSON line, which a recorded full run confirms). Per-query
-    // numbers stay in the two full lines above and in bench_last.json.
-    // n_failed counts a query with ANY failed rep: its median rests on
-    // fewer runs than the rest.
-    val nFailed = results.count(_._4.exists(_ < 0))
-    try spark.stop() catch { case scala.util.control.NonFatal(_) => () }
-    println(
-      s"""{"metric":"total_of_medians","value":${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"n_queries":${results.size},"n_failed":$nFailed,"per_query_in":"stdout above + bench_last.json","sf":$sf}""")
+    def obj(f: Result => String): String =
+      results.map(r => Json.quote(r.name) + ":" + f(r)).mkString("{", ",", "}")
+    val detail = obj { r =>
+      val s = r.stats
+      s"""{"median":${r.median},"min":${r.min},"runs":${r.runs.mkString("[", ",", "]")},""" +
+        s""""jobs":${s.jobs},"stages":${s.stages},"tasks":${s.tasks},""" +
+        s""""executor_s":${s.execRunMs / 1e3},"shuffle_read_bytes":${s.shuffleRead},""" +
+        s""""shuffle_write_bytes":${s.shuffleWrite}}"""
+    }
+    val metric = s""""metric":"total_of_medians","value":"""
+    Seq(
+      s"""{$metric$total,"unit":"sec","reps":$reps,"total_min":$totalMin,"queries":${obj(_.median.toString)},"queries_detail":$detail,"sf":$sf}""",
+      s"""{$metric${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"queries":${obj(r => ms(r.median))},"sf":$sf}""",
+      s"""{$metric${ms(total)},"unit":"sec","reps":$reps,"total_min":${ms(totalMin)},"n_queries":${results.size},"n_failed":${results.count(_.failed)},"per_query_in":"stdout above + bench_last.json","sf":$sf}""")
+  }
+
+  private def printProfile(results: Seq[Result]): Unit = {
+    println(f"${"query"}%-34s ${"med_s"}%7s ${"min_s"}%7s ${"jobs"}%5s ${"stg"}%4s ${"tasks"}%6s ${"exec_s"}%7s ${"shR_MB"}%7s ${"shW_MB"}%7s")
+    results.foreach { r =>
+      val s = r.stats
+      println(f"${r.name}%-34s ${r.median}%7.3f ${r.min}%7.3f ${s.jobs}%5d ${s.stages}%4d ${s.tasks}%6d ${s.execRunMs / 1e3}%7.2f ${s.shuffleRead / 1e6}%7.1f ${s.shuffleWrite / 1e6}%7.1f")
+    }
+  }
+
+  private def catalog(): Unit = {
+    val oracles = SparkEntry.oracleSql.keySet
+    println("| query | correctness check |")
+    println("|---|---|")
+    selected().foreach { case (n, _) =>
+      val o = if (oracles(n)) "DuckDB oracle (rows+schema+values)" else "rows-only + ScalaTest"
+      println(s"| $n | $o |")
+    }
+  }
+
+  /** The registered queries, by name — only those `SPARK_GRAFT_ONLY`
+    * (comma-separated names) lists, when it is set. */
+  def selected(): Seq[(String, Query)] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => only.forall(_(n)) }
   }
 
   /** The engine session at `local[SPARK_GRAFT_CPUS]`, with as many

@@ -7,10 +7,8 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
-    // Dev filter: SPARK_GRAFT_ONLY=q88_bm25_topk,... dumps a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // SPARK_GRAFT_ONLY=q88_bm25_topk,... dumps a subset.
+    val selected = Bench.selected()
     selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
@@ -53,7 +51,7 @@ object Verify {
     // that failed at dump time (missing dir) instead of silently shrinking
     // the "N/N pass" denominator. Extra file — the driver ignores it.
     Files.writeString(Paths.get(s"$outDir/manifest.txt"),
-      selected.keys.toSeq.sorted.mkString("\n"))
+      selected.map(_._1).mkString("\n"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

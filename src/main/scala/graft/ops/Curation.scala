@@ -614,9 +614,7 @@ object Curation {
     * consumption) and no cache: the scored frame is CORPUS-cardinality,
     * so persisting it to save the second pass would hold corpus-sized
     * blocks until LRU eviction across every invocation — the wrong
-    * trade at 100 TB (the vocab-bounded LM model table underneath IS
-    * persisted, so the second pass re-runs only the doc-side join, not
-    * the corpus wordcount). */
+    * trade at 100 TB). */
   def perplexityBucketsApprox(docs: DataFrame, corpus: DataFrame,
                               buckets: Int = 3,
                               relErr: Double = 0.001): DataFrame = {
@@ -676,14 +674,9 @@ object Curation {
       df.select(explode(split(col("text"), " ")).as("tok"))
     val rawCnt = toksOf(docs).groupBy("tok").agg(count(lit(1)).as("cr"))
     // both wordcounts feed two consumers (model join + a totals
-    // aggregate); persist computes each once while staying lazy and
-    // recomputable (see unigramLogProb for why not localCheckpoint, and
-    // for the until-clearCache cache lifecycle these tables share) —
-    // the tables are vocabulary-bounded, so the materialization is small
+    // aggregate); ReuseExchange shares each one's shuffle between them
     val tgtCnt = toksOf(target).groupBy("tok").agg(count(lit(1)).as("ct"))
-      .persist()
     val model = rawCnt.join(tgtCnt, Seq("tok"), "left").na.fill(0L, Seq("ct"))
-      .persist()
     // coalesce: an EMPTY target (no docs matched the target filter)
     // sums to NULL, which would null every score; tt=0 keeps the
     // smoothed estimator finite (every token backs off to 1/(T_r+V))

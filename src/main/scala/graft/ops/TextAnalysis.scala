@@ -653,19 +653,9 @@ object TextAnalysis {
   def unigramLogProb(docs: DataFrame, corpus: DataFrame): DataFrame = {
     val docToks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     // The freq table feeds BOTH the totals aggregate and the doc-side
-    // join; without marking it, Catalyst evaluates the corpus-wide
-    // wordcount subtree once per consumer — an extra full-corpus pass at
-    // scale. persist() computes it once and stays lazy AND recomputable
-    // (localCheckpoint materializes eagerly under AQE — plan-building
-    // alone would run the wordcount — and truncates lineage, so an
-    // executor loss becomes a job failure). Lifecycle: the cached table
-    // is vocabulary-bounded (small by construction) and has no safe
-    // unpersist point inside a lazy builder — blocks stay until LRU
-    // eviction or spark.catalog.clearCache(); deliberate, same for the
-    // bigram and DSIR model tables.
+    // join; ReuseExchange runs the wordcount's shuffle once for both.
     val freq = corpus.select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .persist()
     val total = freq.agg(sum("c").as("tot"))
     // integer-micros per-token scoring (the q88/q110 convention): long
     // sums commute, so the score is identical across partitionings,
@@ -694,8 +684,7 @@ object TextAnalysis {
     * free sums), [[microAvg4]] for the 4-decimal average, and the same
     * double expression shapes the oracle mirrors term for term.
     *
-    * Scale shape: the unigram table is vocabulary-bounded and persisted
-    * once (the [[unigramLogProb]] persist note applies); the distinct-
+    * Scale shape: the unigram table is vocabulary-bounded; the distinct-
     * bigram table is NOT bounded — it grows with corpus size (the
     * Heaps-law tail, see [[bigramLogProb]]) — so its broadcast hint fits
     * curated model corpora and must be dropped for a web-scale
@@ -721,11 +710,8 @@ object TextAnalysis {
           col("col.prev").as("prev"))
     val uni = corpus.select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cu"))
-      .persist()
     val tot = uni.agg(sum("cu").cast("long").as("n"),
       count(lit(1)).cast("long").as("v"))
-    // single consumer (the doc-side join) — no persist; caching here
-    // would materialize a corpus-growing table for zero reuse
     val big = stream(corpus).filter(col("prev").isNotNull)
       .groupBy("prev", "tok").agg(count(lit(1)).as("cb"))
     val prevUni = uni.select(col("tok").as("prev"), col("cu").as("cuprev"))
@@ -787,11 +773,9 @@ object TextAnalysis {
           slice(col("w"), lit(1), size(col("w")) - 1).as("w1"),
           slice(col("w"), lit(2), size(col("w")) - 1).as("w2"))).as("b"))
         .select(col("doc_id"), col("b.w1"), col("b.w2"))
-    // persist keeps the corpus-wide bigram count from being re-evaluated
-    // by its two consumers (prefix fold + model join) — same rationale
-    // (and same lazy/recoverable trade) as unigramLogProb's freq
+    // two consumers (prefix fold + model join) share one shuffle of the
+    // corpus-wide bigram count via ReuseExchange
     val freq = bigrams(corpus).groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .persist()
     // c_prefix(w1) = Σ_w2 c(w1,w2): fold the vocab²-sized freq table
     // instead of re-scanning the corpus bigram stream a second time, then
     // fold the conditional log-prob into it so the (big) doc side pays a
@@ -819,9 +803,10 @@ object TextAnalysis {
     * the phrase-detection pass (word2vec-style "new_york" joining,
     * terminology mining) a curation pipeline runs before tokenization.
     *
-    * Scale: both count tables are map-side-combined aggregates of one
-    * tokenized corpus projection (persisted so the unigram and bigram
-    * passes share the split); the PMI join touches only the
+    * Scale: both count tables are map-side-combined aggregates of the
+    * tokenized corpus, and the totals fold those tables (N = Σ c₁,
+    * B = Σ c₁₂ before the `minCount` prune — exact integer identities),
+    * so the corpus is never re-aggregated; the PMI join touches only the
     * vocabulary-bounded count tables, never the corpus; `minCount`
     * prunes the rare-pair tail (PMI's classic noise: a 1-occurrence
     * pair of two rare words maxes the score) BEFORE the joins; top-k is
@@ -830,7 +815,7 @@ object TextAnalysis {
     * precedent), emitted in integer micros; ties break on the pair. */
   def pmiCollocations(corpus: DataFrame, minCount: Long = 5,
                       topK: Int = 50): DataFrame = {
-    val toked = corpus.select(tokens(col("text")).as("w")).persist()
+    val toked = corpus.select(tokens(col("text")).as("w"))
     val bg = toked.filter(size(col("w")) >= 2)
       .select(explode(arrays_zip(
         slice(col("w"), lit(1), size(col("w")) - 1).as("w1"),
@@ -838,12 +823,11 @@ object TextAnalysis {
       .select(col("b.w1"), col("b.w2"))
     val uni = toked.select(explode(col("w")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    val pairs = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .filter(col("c12") >= minCount)
+    val allPairs = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    val pairs = allPairs.filter(col("c12") >= minCount)
     // one-row totals, the dsirLogRatio shape: broadcast cross join
-    val totals = toked.agg(
-      sum(size(col("w")).cast("long")).as("n_tok"),
-      sum(greatest(size(col("w")) - 1, lit(0)).cast("long")).as("n_big"))
+    val totals = uni.agg(sum("c").cast("long").as("n_tok"))
+      .crossJoin(allPairs.agg(sum("c12").cast("long").as("n_big")))
     pairs
       .crossJoin(broadcast(totals))
       .join(uni.select(col("w").as("w1"), col("c").as("c1")), Seq("w1"))
@@ -879,7 +863,6 @@ object TextAnalysis {
     val sw = docs
       .select(col(sourceCol).as("src"), explode(tokens(col("text"))).as("w"))
       .groupBy("src", "w").agg(count(lit(1)).as("c_sw"))
-      .persist() // three consumers below fold it into model tables
     val sTot = sw.groupBy("src").agg(sum("c_sw").as("n_s"))
     val gw = sw.groupBy("w").agg(sum("c_sw").as("c_w"))
     val totals = sw.agg(sum("c_sw").as("n"))

@@ -213,68 +213,17 @@ class StreamRegistry(spark: SparkSession, val root: String,
     }
   }
 
-  /** REPLACE a stream's contents with `df` — the materialized-view
-    * refresh primitive (the crawl frontier, merged in-link counts):
-    * `df` is written to a private `<dir>.compacting` directory FIRST
-    * (so a plan that reads the stream's current contents — an
-    * incremental merge — executes against the live directory), then
-    * swapped in via the [[compact]] two-rename rotate, inheriting
-    * [[recover]]'s crash repair: a leftover tmp is dropped, a crash
-    * between the renames rolls back to the PREVIOUS view, and the
-    * stale `.old` copy is reaped on the next read. Same object-store
-    * caveat as compact (rename is copy+delete on S3A — back refreshed
-    * views with a table format there); on HDFS/local each rename is
-    * atomic, so readers never see a half-written view.
-    *
-    * `meta` entries are written as `_<key>` files INSIDE the new
-    * directory BEFORE the rotate, so metadata — e.g. the merge
-    * high-water mark that makes a refresh idempotent under replay —
-    * becomes visible atomically WITH the data it describes
-    * (underscore-prefixed files are invisible to Spark/Hadoop
-    * readers). Read them back with [[refreshMeta]].
-    *
-    * Flat streams only: a refreshed view is a compact aggregate, not
-    * a hive-partitioned corpus. */
-  def refresh(name: String, df: DataFrame,
-              meta: Map[String, String] = Map.empty): Unit = {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-    require(partitionsOf(name).isEmpty,
-      s"refresh replaces FLAT streams; '$name' is hive-partitioned")
-    recover(name) // repair any prior crash before rotating again
-    if (!exists(name)) persistSchema(name, df.schema, Nil)
-    val dir = new HPath(streamDir(name))
-    val tmp = new HPath(s"${streamDir(name)}.compacting")
-    val old = new HPath(s"${streamDir(name)}.old")
-    df.write.format(format).save(tmp.toString)
-    meta.foreach { case (k, v) => writeText(s"$tmp/_$k", v) }
-    val fs = FileSystem.get(dir.toUri, spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir) // first refresh of a declared-but-never-written stream
-    if (!fs.rename(dir, old)) throw new java.io.IOException(s"cannot rotate $dir")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(old, dir) // roll back
-      throw new java.io.IOException(s"cannot swap in refreshed $name")
-    }
-    fs.delete(old, true); ()
-  }
-
-  /** Read back a `_<key>` metadata file written by [[refresh]]'s `meta`
-    * (None when the stream or key doesn't exist). */
-  def refreshMeta(name: String, key: String): Option[String] = {
-    recover(name)
-    readTextIfExists(s"${streamDir(name)}/_$key")
-  }
-
   /** REPLACE one hive partition of a single-column-partitioned stream —
-    * the BUCKETED refresh primitive. Where [[refresh]] rewrites a whole
-    * materialized view per update, this rotates exactly ONE
-    * `<col>=<value>` subdirectory: an incremental merge whose write
+    * the materialized-view refresh primitive (the crawl frontier, merged
+    * in-link counts). It rotates exactly ONE `<col>=<value>`
+    * subdirectory, never the whole view: an incremental merge whose write
     * amplification is ∝ the partitions the batch touches, not the
     * table (the 100 TB contract for corpus-shaped views like the crawl
     * frontier's in-link count table — per micro-batch, a handful of
     * host-hash buckets rewrite; the other N−k are untouched files).
     *
-    * Same two-rename rotate and crash repair as [[refresh]], scoped to
-    * the partition: output lands in a DOT-PREFIXED sibling
+    * Same two-rename rotate as [[compact]] and crash repair as
+    * [[recover]], scoped to the partition: output lands in a DOT-PREFIXED sibling
     * (`.X.compacting` — hidden from every Spark reader, so a half-
     * written rotate can never surface as data OR as a bogus partition
     * value), `meta` entries become `_<key>` files inside it (atomic

@@ -23,10 +23,15 @@ class QueriesSpec extends SparkSpec {
     // except possibly LSH candidate sets on the tiny sf — allow those two.
     val allowEmpty = Set("q33_minhash_lsh", "q41_ann_lsh", "q32_jaccard_neardup",
       "q05_anti_join", "q04_semi_join")
+    // ... and no query leaves a cache entry behind: a persist() inside a
+    // lazy builder has no release point and would hold blocks for the
+    // session's lifetime.
+    spark.catalog.clearCache()
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       val n = run(name).count()
       assert(n >= 0, s"$name failed")
       if (!allowEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cache entry")
     }
   }
 

@@ -98,41 +98,6 @@ class SourcesSinksSpec extends SparkSpec {
       .contains("PartitionFilters: [isnotnull(month"))
   }
 
-  test("refresh replaces a view with its metadata riding the rotate: " +
-    "self-referential merge plans read the previous view, a crash " +
-    "between the renames rolls back view AND mark together") {
-    val s = spark
-    import s.implicits._
-    val reg = new StreamRegistry(spark,
-      Files.createTempDirectory("graft-refresh").toString)
-    reg.refresh("v", Seq(("a", 1L)).toDF("k", "n"), Map("batch" -> "0"))
-    assert(reg.refreshMeta("v", "batch") === Some("0"))
-    // self-referential merge: the plan READS v while the new v writes
-    // to the private tmp dir — the incremental-count-table shape
-    val merged = reg.read("v")
-      .unionByName(Seq(("a", 2L), ("b", 5L)).toDF("k", "n"))
-      .groupBy("k").agg(sum("n").as("n"))
-    reg.refresh("v", merged, Map("batch" -> "1"))
-    assert(reg.read("v").as[(String, Long)].collect().toMap ===
-      Map("a" -> 3L, "b" -> 5L))
-    assert(reg.refreshMeta("v", "batch") === Some("1"))
-    // crash between the two renames of a NEXT refresh: dir gone,
-    // .old = the committed view → next read rolls back, and the merge
-    // mark stays consistent with the data it described
-    val dir = new java.io.File(s"${reg.root}/streams/v")
-    val old = new java.io.File(s"${reg.root}/streams/v.old")
-    assert(dir.renameTo(old))
-    assert(reg.read("v").as[(String, Long)].collect().toMap ===
-      Map("a" -> 3L, "b" -> 5L))
-    assert(reg.refreshMeta("v", "batch") === Some("1"))
-    // refreshed views are flat by contract
-    reg.write(Seq(("x", "2024-01")).toDF("v", "month"), "pv",
-      partitionBy = Seq("month"))
-    intercept[IllegalArgumentException] {
-      reg.refresh("pv", Seq(("y", "2024-02")).toDF("v", "month"))
-    }
-  }
-
   test("refreshPartition rotates ONE hive bucket: self-referential " +
     "per-bucket merge, per-partition meta, replay REWRITES instead of " +
     "appending, a crash rolls back the bucket alone, sibling buckets " +
