@@ -58,8 +58,9 @@ object Bench {
         }
       case "profile" => printProfile(measure(sfDir, reps))
       case "explain" =>
+        val queries = selected()
         val spark = session()
-        selected().foreach { case (name, fn) =>
+        queries.foreach { case (name, fn) =>
           println(s"===== $name =====")
           fn(spark, sfDir).explain("formatted")
         }
@@ -73,11 +74,12 @@ object Bench {
   /** The rep loop of `bench` and `profile`: warm up, then `reps` timed
     * reps of every selected query, with the last rep's stage metrics. */
   private def measure(sfDir: String, reps: Int): Seq[Result] = {
+    val queries = selected()
     val spark = session()
     val stats = new StageListener
     spark.sparkContext.addSparkListener(stats)
     warmTables(spark, sfDir)
-    val runs = selected().map { case (name, fn) =>
+    val runs = queries.map { case (name, fn) =>
       name -> (1 to reps).map(timeRep(spark, sfDir, name, _, fn))
     }
     // stop() drains the listener bus: every stage event is in before
@@ -187,9 +189,18 @@ object Bench {
 
   /** The registered queries, by name — only those `SPARK_GRAFT_ONLY`
     * (comma-separated names) lists, when it is set. */
-  def selected(): Seq[(String, Query)] = {
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) => only.forall(_(n)) }
+  def selected(): Seq[(String, Query)] = select(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  /** [[selected]] for a given name list: names are trimmed and empty
+    * segments dropped; a name no query is registered under fails the run
+    * (a typo must not select nothing and still report success). */
+  def select(only: Option[String]): Seq[(String, Query)] = {
+    val all = SparkEntry.queries
+    val names = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = names.getOrElse(Set.empty).filterNot(all.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (n, _) => names.forall(_(n)) }
   }
 
   /** The engine session at `local[SPARK_GRAFT_CPUS]`, with as many

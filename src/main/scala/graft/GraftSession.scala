@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone (oracle/parity discipline, SURVEY.md §5.2);
   *  - nanos-as-long parquet reads (fixture `events.ts` is TIMESTAMP(NANOS);
   *    see `Tables.events` for the µs conversion);
-  *  - native function extensions (blake2b SQL surface) pre-registered.
+  *  - the native SQL functions ([[graft.functions.GraftExtensions]]) —
+  *    the only way they are installed, so every session that needs them
+  *    (benches, `Verify`, the test suites) is built here.
   *
   * Shuffle partitions are caller-set: match cores in local mode (not the
   * 200 default), ~2-3× total executor cores on a cluster.

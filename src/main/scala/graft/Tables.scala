@@ -42,8 +42,8 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** Register every fixture table as a temp view so a SQL-first user can
-    * drive the whole surface through `spark.sql` (with the native
-    * functions via [[graft.functions.GraftFunctions.register]]). */
+    * drive the whole surface through `spark.sql` (the native functions
+    * come with a session built by [[graft.GraftSession.builder]]). */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
         "region", "documents", "embeddings")

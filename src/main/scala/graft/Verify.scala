@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Bench.session()
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q88_bm25_topk,... dumps a subset.
     val selected = Bench.selected()
+    val spark = Bench.session()
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

@@ -47,12 +47,9 @@ case class Blake2bHash(child: Expression, bits: Int) extends UnaryExpression {
   * expression (CodegenFallback): the per-row cost is the JCE digest
   * itself, so a generated call body buys nothing — but expression form
   * (vs the former Scala UDF) still drops the encoder round-trip, gets
-  * analysis-time type checking, and lets BOTH SQL surfaces
-  * ([[GraftExtensions]] and `GraftFunctions.register`) offer the same
+  * analysis-time type checking, and lets [[GraftExtensions]] offer the
   * name, which the UDF form could not (extensions inject expression
-  * builders only — sha3_512 used to exist in one surface and not the
-  * other, the exact drift the shared [[SqlFunctions]] table exists to
-  * prevent). */
+  * builders only). */
 case class Sha3_512Hash(child: Expression) extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
 
@@ -76,10 +73,9 @@ case class Sha3_512Hash(child: Expression) extends UnaryExpression
 
 /** SparkSessionExtensions hook — registers the native functions for
   * SQL use: `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. Iterates the
-  * same [[SqlFunctions]] table as `GraftFunctions.register`, so the two
-  * SQL surfaces accept exactly the same calls (same arity errors, same
-  * literal parsing). */
+  * `spark.sql.extensions=graft.functions.GraftExtensions` (what
+  * `graft.GraftSession.builder` sets). Iterates the [[SqlFunctions]]
+  * table, the one list of SQL-callable names. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =
     SqlFunctions.all.foreach { case (name, clazz, builder) =>

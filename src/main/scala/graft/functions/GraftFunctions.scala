@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scalar-function parity surface for the reference's `utils.py`:
@@ -32,7 +32,7 @@ object GraftFunctions {
   def blake2b_512(c: Column): Column = ncol(Blake2bHash(expression(c), 512))
   /** SHA3-512 hex digest — eval-only native expression ([[Sha3_512Hash]]:
     * the JCE digest dominates, but expression form drops the former UDF's
-    * encoder round-trip and registers on both SQL surfaces). */
+    * encoder round-trip and is SQL-callable through [[GraftExtensions]]). */
   def sha3_512(c: Column): Column   = ncol(Sha3_512Hash(expression(c)))
 
   /** Unicode NFC canonical composition — native codegen'd expression,
@@ -51,23 +51,13 @@ object GraftFunctions {
   /** Deterministic per-row uid column: blake2b_256 of the given key, first
     * 12 hex chars — the distributed analog of the reference uid. */
   def uidFor(c: Column): Column = substring(blake2b_256(c.cast("string")), 1, 12)
-
-  /** Register SQL-callable names so `spark.sql` queries can use them too
-    * (blake2b as the native codegen'd expression; for cluster deployments
-    * prefer `spark.sql.extensions=graft.functions.GraftExtensions` —
-    * both surfaces iterate [[SqlFunctions.all]], so they cannot drift). */
-  def register(spark: SparkSession): Unit =
-    SqlFunctions.all.foreach { case (name, _, builder) =>
-      org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, name, builder)
-    }
 }
 
 /** THE table of SQL-callable native functions — `(name, expression
-  * class, builder)` — iterated by both SQL surfaces
-  * (`GraftFunctions.register` and [[GraftExtensions]]), so a function
-  * exists in both or neither, with the same [[SqlArgs]] arity errors
-  * and literal rules. */
-private[functions] object SqlFunctions {
+  * class, builder)` — that [[GraftExtensions]] injects into every
+  * session built by `graft.GraftSession.builder`, with the
+  * [[SqlArgs]] arity errors and literal rules. */
+private[graft] object SqlFunctions {
   import org.apache.spark.sql.catalyst.expressions.Expression
   import SqlArgs.{arity, intArg}
 

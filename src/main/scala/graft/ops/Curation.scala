@@ -597,42 +597,6 @@ object Curation {
       .withColumn("bucket", ntile(buckets).over(w))
   }
 
-  /** The corpus-cardinality scale path of [[perplexityBuckets]] — what
-    * CCNet actually ships: cut thresholds once from quantiles of the
-    * score distribution, then bucket by pure per-row comparison. No
-    * global sort at any size: `approxQuantile` (Greenwald-Khanna) runs
-    * as one aggregation over the (doc_id, score) projection, the
-    * thresholds become plan literals, and assignment is a codegen'd
-    * when-chain. The trade vs the exact form: bucket POPULATIONS are
-    * approximate near thresholds (bounded by `relErr`), bucket
-    * MEMBERSHIP is deterministic given the thresholds, and a re-run on
-    * the same data reproduces both (the sketch is deterministic for a
-    * fixed partitioning). Unscored documents (no in-corpus tokens) land
-    * in the last bucket, as in the exact form.
-    *
-    * Deliberately TWO scoring passes (sketch, then assignment at
-    * consumption) and no cache: the scored frame is CORPUS-cardinality,
-    * so persisting it to save the second pass would hold corpus-sized
-    * blocks until LRU eviction across every invocation — the wrong
-    * trade at 100 TB). */
-  def perplexityBucketsApprox(docs: DataFrame, corpus: DataFrame,
-                              buckets: Int = 3,
-                              relErr: Double = 0.001): DataFrame = {
-    require(buckets >= 2, s"perplexityBucketsApprox needs >= 2 buckets, got $buckets")
-    val scored = docs.select(col("doc_id"))
-      .join(TextAnalysis.unigramLogProb(docs, corpus), Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_tokens"))
-    val probs = (1 until buckets).map(i => i.toDouble / buckets)
-    // thresholds on the ASCENDING score; bucket 1 (head) is the top tail
-    val cuts = scored.filter(!isnan(col("avg_logprob")))
-      .stat.approxQuantile("avg_logprob", probs.toArray, relErr)
-    val bucket = cuts.zipWithIndex.foldLeft(lit(buckets)) {
-      // score > cut(i) ⇒ above the (i+1)/buckets quantile ⇒ bucket ≤ buckets-1-i
-      case (acc, (cut, i)) => when(col("avg_logprob") > cut, buckets - 1 - i).otherwise(acc)
-    }
-    scored.withColumn("bucket", coalesce(bucket, lit(buckets)))
-  }
-
   /** DSIR-style importance log-ratio (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): score each pool
     * document by how much more likely its tokens are under a TARGET

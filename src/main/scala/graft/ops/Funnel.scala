@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Event-sequence analytics over an (user, type, timestamp) event log:
   * ordered funnels and cohort retention — the product-analytics surface
@@ -36,40 +35,6 @@ object Funnel {
           col(userCol) === col("graft_u") && col("graft_t") > col(s"ts$i"), "left")
         .groupBy(acc.columns.toIndexedSeq.map(col): _*)
         .agg(min(col("graft_t")).as(s"ts${i + 1}"))
-    }
-  }
-
-  /** Streaming ordered funnel: a per-user state machine over
-    * mapGroupsWithState tracking the same strictly-ordered step times as
-    * [[funnelTimes]]. Each micro-batch's events sort by time before
-    * folding, so intra-batch disorder is tolerated; across batches the
-    * machine assumes per-user non-decreasing event time (in-order
-    * delivery — the standard streaming-funnel contract; cross-batch late
-    * data needs the batch path, which FunnelSpec proves equivalent on
-    * in-order logs). State is a fixed |steps|-long array per user —
-    * bounded regardless of stream length. Emits the user's current step
-    * times every batch (update mode); unreached steps are None.
-    * Input rows: (user_id, event_type, ts). */
-  def streamingFunnelTimes(events: Dataset[(Long, String, Long)],
-                           steps: Seq[String]): Dataset[(Long, Seq[Option[Long]])] = {
-    val session = events.sparkSession
-    import session.implicits._
-    val Unset = Long.MinValue
-    events.groupByKey(_._1).mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-      (uid: Long, evs: Iterator[(Long, String, Long)], state: GroupState[Array[Long]]) =>
-        val cur = state.getOption.getOrElse(Array.fill(steps.size)(Unset))
-        evs.toSeq.sortBy(e => (e._3, e._2)).foreach { case (_, typ, t) =>
-          // first OPEN step this event can satisfy — not indexOf(typ),
-          // which would pin repeated step types (view → view → buy) to
-          // their first occurrence and never fill the later stage
-          val i = steps.indices.find { i =>
-            steps(i) == typ && cur(i) == Unset &&
-              (i == 0 || (cur(i - 1) != Unset && t > cur(i - 1)))
-          }
-          i.foreach(cur(_) = t)
-        }
-        state.update(cur)
-        (uid, cur.toSeq.map(v => if (v == Unset) None else Some(v)))
     }
   }
 

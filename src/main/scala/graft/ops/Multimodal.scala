@@ -175,30 +175,6 @@ object Multimodal {
       }
   }
 
-  /** Resize stub: maps decoded media features to target dimensions
-    * preserving aspect ratio (longest side = `maxSide`). The arithmetic is
-    * the real resize contract; only the pixel work is stubbed out with the
-    * decode. */
-  def resizeStub(features: Dataset[MediaFeature], maxSide: Int)
-                (implicit spark: SparkSession): Dataset[MediaFeature] = {
-    import spark.implicits._
-    features.map { m =>
-      val scale = maxSide.toDouble / math.max(m.width, m.height)
-      if (scale >= 1.0) m
-      else m.copy(width = math.max(1, (m.width * scale).toInt),
-        height = math.max(1, (m.height * scale).toInt))
-    }
-  }
-
-  /** Frame-sample stub: pick k deterministic "frame offsets" from a payload
-    * — the plumbing for video frame extraction (offsets real, decode stub). */
-  def frameOffsets(docs: DataFrame, k: Int = 4): DataFrame =
-    withBinaryPayload(docs)
-      .select(col("doc_id"), length(col("payload")).cast("long").as("n_bytes"),
-        transform(sequence(lit(0), lit(k - 1)),
-          i => floor(i * length(col("payload")).cast("long") / k).cast("long"))
-          .as("frame_offsets"))
-
   // ------------------------------------------------- perceptual image hash
 
   /** Perceptual-hash row: `decoded` marks payloads ImageIO could turn

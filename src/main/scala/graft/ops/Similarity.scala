@@ -313,8 +313,7 @@ object Similarity {
   /** Train the IVF coarse quantizer and return its centroid matrix —
     * separated from [[annIvf]] so a 100 TB deployment trains ONCE and
     * reuses the centers across every subsequent search batch (faiss
-    * train/add/search shape) via [[annIvfWith]], persisting them with
-    * [[saveIvfCenters]]/[[loadIvfCenters]]. Bounded, order-stable
+    * train/add/search shape) via [[annIvfWith]]. Bounded, order-stable
     * sample — at 100 TB prepend .sample(fraction) sized so ~trainCap rows
     * survive; training never iterates over the full corpus. */
   def trainIvfCenters(corpus: DataFrame, nlist: Int = 16,
@@ -324,52 +323,6 @@ object Similarity {
       .orderBy("vec_id").limit(trainCap)
       .collect().map(_.getSeq[Double](1).toArray)
     localKMeans(sample, nlist, iters, seed)
-  }
-
-  /** Persist a trained quantizer as a registry stream (`cell`,
-    * `center`) — the artifact a scheduled 100 TB ingest loads instead of
-    * retraining. One quantizer per stream name (the registry is
-    * append-only; version by name). */
-  def saveIvfCenters(spark: org.apache.spark.sql.SparkSession,
-                     reg: graft.runtime.StreamRegistry, name: String,
-                     centers: Array[Array[Double]]): Unit = {
-    import spark.implicits._
-    val df = centers.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toDF("cell", "center")
-    saveRegistryArtifact(reg, name, df, "quantizer")
-  }
-
-  /** The model-artifact publish protocol shared by [[saveIvfCenters]]
-    * and [[savePqModel]]: create-exclusive claim (a concurrent or
-    * duplicate save of the same name must FAIL, not append a second
-    * matrix onto the first), and a data-write failure must not leave
-    * the name claimed-but-empty (retries would see "already exists"
-    * forever and loads would return an empty artifact) — best-effort
-    * unclaim, then rethrow. */
-  private def saveRegistryArtifact(reg: graft.runtime.StreamRegistry,
-                                   name: String, df: DataFrame,
-                                   kind: String): Unit = {
-    try reg.createExclusive(name, df.schema)
-    catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new IllegalArgumentException(
-          s"$kind stream '$name' already exists (one artifact per name)", e)
-    }
-    try reg.write(df, name)
-    catch { case e: Throwable =>
-      try reg.delete(name) catch { case _: Throwable => () }
-      throw e
-    }
-  }
-
-  /** Load a quantizer saved by [[saveIvfCenters]] (cell order restored). */
-  def loadIvfCenters(reg: graft.runtime.StreamRegistry,
-                     name: String): Array[Array[Double]] = {
-    val centers = reg.read(name).orderBy("cell")
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(centers.nonEmpty,
-      s"quantizer stream '$name' has no centers (half-published artifact?)")
-    centers
   }
 
   /** IVF search against a pre-trained quantizer ([[trainIvfCenters]]):
@@ -449,7 +402,7 @@ object Similarity {
     val vecs = corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // a NULL embedding among the k lowest vec_ids would NPE the getSeq
     // below with no useful message — skip nulls here, the same guard
-    // pqTrainSampled applies to its sample collect
+    // pqTrainSampledResidual applies to its sample collect
     var centers = vecs.filter(col("v").isNotNull).orderBy("vec_id").limit(k)
       .collect().map(_.getSeq[Double](1).toArray)
     require(centers.length == k,
@@ -526,40 +479,6 @@ object Similarity {
     PqModel(dsub, books)
   }
 
-  /** [[pqTrain]]'s bounded-sample companion — the [[trainIvfCenters]]
-    * shape: ONE order-stable collect of ≤ trainCap vectors, then
-    * [[localKMeans]] per subspace slice entirely on the driver. This is
-    * the recurring-deployment trainer (faiss trains PQ on a sample for
-    * the same reason): zero per-subspace corpus passes, so training
-    * cost is independent of both corpus size and m. At 100 TB prepend
-    * .sample(fraction) sized so ~trainCap rows survive. */
-  def pqTrainSampled(corpus: DataFrame, m: Int, ksub: Int,
-                     trainCap: Int = 4096, iters: Int = 5,
-                     seed: Long = 42L): PqModel = {
-    require(m >= 1 && ksub >= 1, s"need m >= 1, ksub >= 1; got m=$m ksub=$ksub")
-    // null embeddings are excluded from the sample (pqTrain's tolerance:
-    // its dim-consensus pass filters nulls the same way) — without the
-    // filter, getSeq(...).toArray NPEs with no message
-    val sample = corpus.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("e"))
-      .filter(col("e").isNotNull)
-      .orderBy("vec_id").limit(trainCap)
-      .collect().map(_.getSeq[Double](1).toArray)
-    require(sample.nonEmpty, "pqTrainSampled needs a non-empty corpus")
-    val dims = sample.map(_.length).distinct.sorted
-    require(dims.length == 1,
-      s"pqTrainSampled: sample mixes embedding dimensions " +
-        s"${dims.mkString("/")} — filter dirty embeddings before fitting")
-    val dim = dims.head
-    require(dim % m == 0, s"embedding dim $dim not divisible into m=$m subspaces")
-    val dsub = dim / m
-    val books = (0 until m).map { s =>
-      localKMeans(sample.map(v => java.util.Arrays.copyOfRange(
-        v, s * dsub, (s + 1) * dsub)), ksub, iters, seed)
-    }.toArray
-    PqModel(dsub, books)
-  }
-
   /** Driver-side twin of the native `IvfCells` nearest-cell rule
     * (squared-L2 argmin, ties to the LOWER index) — used only to form
     * TRAINING residuals in [[pqTrainSampledResidual]], where the sample
@@ -578,8 +497,8 @@ object Similarity {
     best
   }
 
-  /** [[pqTrainSampled]] on IVF RESIDUALS — the faiss IndexIVFPQ
-    * training recipe (by_residual): codebooks are fit to
+  /** [[pqTrain]]'s bounded-sample companion on IVF RESIDUALS — the
+    * faiss IndexIVFPQ training recipe (by_residual): codebooks are fit to
     * `x − center(cell(x))` rather than to `x`, which is what makes
     * IVF-PQ rank WITHIN a cell. On clustered data the raw-vector
     * codebooks spend their ksub centroids separating the clusters the
@@ -588,8 +507,12 @@ object Similarity {
     * tie-break; residuals re-center every cell at the origin and the
     * same ksub centroids resolve within-cell structure instead
     * (Jégou, Douze & Schmid, "Product Quantization for Nearest
-    * Neighbor Search", TPAMI 2011, §IV). Same bounded-sample contract
-    * as [[pqTrainSampled]]. Use this trainer for [[pqIndex]] +
+    * Neighbor Search", TPAMI 2011, §IV). Bounded-sample contract (the
+    * [[trainIvfCenters]] shape): ONE order-stable collect of ≤ trainCap
+    * non-null vectors, then [[localKMeans]] per subspace slice entirely
+    * on the driver — zero per-subspace corpus passes, so training cost
+    * is independent of both corpus size and m. At 100 TB prepend
+    * .sample(fraction) sized so ~trainCap rows survive. Use this trainer for [[pqIndex]] +
     * [[annIvfPq]]/[[annIvfPqAdc]]; the flat-PQ family
     * ([[pqEncode]]/[[pqDecode]]/[[pqAdcTopK]]) keeps raw-vector
     * training. */
@@ -622,52 +545,6 @@ object Similarity {
         v, s * dsub, (s + 1) * dsub)), ksub, iters, seed)
     }.toArray
     PqModel(dsub, books)
-  }
-
-  /** Persist a PQ model as a registry stream (`subspace`, `cid`,
-    * `center`) — the [[saveIvfCenters]] contract: create-exclusive
-    * claim (one artifact per name, version by name), best-effort
-    * unclaim if the data write fails so retries don't see a
-    * claimed-but-empty stream forever. */
-  def savePqModel(spark: org.apache.spark.sql.SparkSession,
-                  reg: graft.runtime.StreamRegistry, name: String,
-                  model: PqModel): Unit = {
-    import spark.implicits._
-    val df = (for {
-      s <- model.codebooks.indices
-      c <- model.codebooks(s).indices
-    } yield (s, c, model.codebooks(s)(c).toSeq))
-      .toDF("subspace", "cid", "center")
-    saveRegistryArtifact(reg, name, df, "PQ model")
-  }
-
-  /** Load a model saved by [[savePqModel]], shape-revalidated: a
-    * half-published, truncated, or hand-edited stream must fail loudly
-    * here — every consumer indexes codebooks by (subspace, cid), so a
-    * silently missing subspace or ragged centroid would mis-score
-    * everything downstream. */
-  def loadPqModel(reg: graft.runtime.StreamRegistry,
-                  name: String): PqModel = {
-    val rows = reg.read(name).orderBy("subspace", "cid")
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    require(rows.nonEmpty,
-      s"PQ model stream '$name' has no centers (half-published artifact?)")
-    val books = rows.groupBy(_._1).toSeq.sortBy(_._1)
-    require(books.map(_._1) == (0 until books.length),
-      s"PQ model stream '$name' has non-contiguous subspace ids " +
-        books.map(_._1).mkString("/"))
-    val mats = books.map { case (s, rs) =>
-      require(rs.map(_._2).sorted.toSeq == (0 until rs.length),
-        s"PQ model stream '$name' subspace $s has non-contiguous cids")
-      rs.sortBy(_._2).map(_._3)
-    }
-    val ksubs = mats.map(_.length).distinct
-    val dsubs = mats.flatMap(_.map(_.length)).distinct
-    require(ksubs.length == 1 && dsubs.length == 1 && dsubs.head > 0,
-      s"PQ model stream '$name' is ragged: ksub ${ksubs.mkString("/")}, " +
-        s"dsub ${dsubs.mkString("/")}")
-    PqModel(dsubs.head, mats.map(_.toArray).toArray)
   }
 
   /** Encode each vector to its `m` sub-centroid codes: squared-L2 argmin

@@ -250,7 +250,7 @@ object WebText {
   /** First `<base href=…>` target of a page (empty when absent) — the
     * HTML mechanism that overrides the page URL as the resolution base
     * for every relative link on the page. Same quote/attribute-order
-    * handling as [[extractLinks]]; may itself be relative (the HTML
+    * handling as [[extractHrefs]]; may itself be relative (the HTML
     * spec resolves it against the page URL — [[resolvedLinkRows]]
     * does). */
   def baseHref(html: Column): Column =
@@ -259,9 +259,12 @@ object WebText {
       1), lit("&amp;"), lit("&"))
 
   /** Every quoted `href` target of a page's `<a>` tags in document
-    * order, RELATIVE FORMS INCLUDED — the raw-reference sibling of
-    * [[extractLinks]] (which keeps only absolute http(s) targets).
-    * `&amp;` decoded as there. */
+    * order, RELATIVE FORMS INCLUDED. Accepts single- or double-quoted
+    * attributes and any attribute order inside the tag; the attribute
+    * name is anchored to a preceding separator (whitespace or a closing
+    * quote), so `data-href="…"` is never a link. The one entity that
+    * legally appears raw inside attribute values (`&amp;`) is decoded,
+    * so the URL is byte-comparable with its canonical form. */
   def extractHrefs(html: Column): Column =
     transform(regexp_extract_all(html,
         lit("(?is)<a\\s(?:[^>]*?[\\s\"'])?href\\s*=\\s*[\"']([^\"'<>\\s]+)[\"']"),
@@ -339,7 +342,7 @@ object WebText {
   /** The multi-label suffix rules as a one-column `suffix` frame —
     * [[MultiLabelSuffixGroups]] flattened plus [[ThreeLabelSuffixes]].
     * A production deployment replaces this with the full
-    * publicsuffix.org registry loaded via [[loadPublicSuffixList]]
+    * publicsuffix.org registry as a one-column `suffix` frame
     * (wildcard/exception syntax included): the TABLE path scales to
     * thousands of rules where a generated alternation regex cannot. */
   def suffixTable(spark: SparkSession): DataFrame = {
@@ -436,51 +439,6 @@ object WebText {
           s"graft_w$m", s"graft_e$m")): _*)
   }
 
-  /** Load a publicsuffix.org–format rule list into the one-column
-    * `suffix` frame [[registeredDomainByTable]] consumes: `//`
-    * comments and blank lines dropped, rules trimmed (wildcard `*.`
-    * and exception `!` syntax pass through). `section` restricts to
-    * the `===BEGIN ICANN DOMAINS===` / `===BEGIN PRIVATE DOMAINS===`
-    * block (`"icann"` | `"private"` | `"all"`). The file is
-    * control-plane sized (~250 KB for the full registry), so it is
-    * read driver-side through the Hadoop FS API (works on local/HDFS/
-    * object-store paths alike) and becomes a broadcast-sized local
-    * relation — exactly the shape the suffix join wants. */
-  def loadPublicSuffixList(spark: SparkSession, path: String,
-                           section: String = "all"): DataFrame = {
-    require(Set("all", "icann", "private")(section),
-      s"section must be all|icann|private, got '$section'")
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    var active = section == "all"
-    val rules = Seq.newBuilder[String]
-    text.split("\n").foreach { raw =>
-      val line = raw.trim
-      if (line.startsWith("//")) {
-        if (line.contains("===BEGIN ICANN DOMAINS==="))
-          active = section != "private"
-        else if (line.contains("===BEGIN PRIVATE DOMAINS==="))
-          active = section != "icann"
-      } else if (line.nonEmpty && active) rules += line
-    }
-    import spark.implicits._
-    rules.result().toDF("suffix")
-  }
-
-  /** Drop rows whose registered domain appears in `blocked` (a one-column
-    * `domain` frame). The blocklist is small by definition (curated);
-    * AQE turns the anti-join into a broadcast at runtime, so the corpus
-    * side never shuffles. */
-  def filterBlockedDomains(df: DataFrame, urlCol: String, blocked: DataFrame): DataFrame =
-    df.withColumn("graft_rd", registeredDomain(col(urlCol)))
-      .join(blocked.select(col("domain").as("graft_rd")), Seq("graft_rd"), "left_anti")
-      .drop("graft_rd")
-
   // ---------------------------------------------------------------- HTML
 
   /** Visible text of an HTML payload: `<script>`/`<style>` blocks and
@@ -533,32 +491,11 @@ object WebText {
     trim(regexp_replace(decoded, "\\s+", " "))
   }
 
-  /** All ABSOLUTE http(s) `href` targets of a page's `<a>` tags, in
-    * document order (relative links are excluded here — use
-    * [[resolvedLinkRows]]/[[resolveUrl]] when the page URL is in hand,
-    * which is the full-fidelity path since most real-page links are
-    * relative). Accepts single- or double-quoted attributes and any
-    * attribute order inside the tag; the one entity that legally appears
-    * raw inside attribute values (`&amp;`) is decoded so the extracted
-    * URL is byte-comparable with its canonical form. Pure codegen'd
-    * `regexp_extract_all` — Java-regex∩RE2 subset like every WebText
-    * expression (no backreferences: both quote positions are the same
-    * two-char class, not a `(['"]).*?\1`; the URL body excludes both
-    * quote chars so the match can never run past its closing quote).
-    * The attribute name is anchored to a preceding separator
-    * (whitespace or a closing quote), so an attribute merely ENDING in
-    * `href` (`data-href="…"`) is never extracted as a link. */
-  def extractLinks(html: Column): Column = {
-    val pat = "(?is)<a\\s(?:[^>]*?[\\s\"'])?href\\s*=\\s*[\"'](https?://[^\"'<>\\s]+)[\"']"
-    transform(regexp_extract_all(html, lit(pat), lit(1)),
-      l => regexp_replace(l, "&amp;", "&"))
-  }
-
   /** (href, anchor) pairs for a page's absolute http(s) links — anchor
     * text is the label OTHER pages' authors give a target, the classic
     * relevance signal a crawl pipeline aggregates per target domain
     * (and a training-pair source: anchor → linked page). Same
-    * quote/attribute handling as [[extractLinks]]; the anchor is the
+    * quote/attribute handling as [[extractHrefs]]; the anchor is the
     * tag's inner content up to the first `</a>` with nested markup
     * stripped, character references decoded in full
     * ([[graft.functions.HtmlUnescapeOps]]), and whitespace collapsed. The outer match extracts whole `<a …>…</a>` spans
@@ -687,17 +624,6 @@ object WebText {
         trim(regexp_extract(u, "(?is)<lastmod>\\s*([^<]*?)\\s*</lastmod>", 1))
           .as("lastmod")))
 
-  /** Link-density signal for boilerplate scoring: fraction (in integer
-    * micros, order-free) of the visible characters that live inside
-    * `<a …>…</a>` spans. High link density marks navigation/footer
-    * chrome; the standard keep gate is `link_density ≤ ~0.5`. */
-  def linkDensityMicros(html: Column): Column = {
-    val anchors = regexp_replace(html, "(?is)<a[\\s>].*?</a>", "")
-    val total = length(visibleText(html)).cast("long")
-    val nonAnchor = length(visibleText(anchors)).cast("long")
-    Micros.ratio(total - nonAnchor, total)
-  }
-
   /** Block-level tag boundary: opening or closing occurrence of any
     * HTML block-level element, or `<br>`. Splitting on these yields the
     * visual text blocks a reader perceives — the segmentation unit of
@@ -741,10 +667,11 @@ object WebText {
       .withColumn("block_text", visibleText(col("raw")))
       .withColumn("n_chars", length(col("block_text")).cast("long"))
       .filter(col("n_chars") > 0)
-      // n_chars IS linkDensityMicros' total term — reuse it instead of
-      // re-running the visibleText regex chain on `raw` a second time
-      // (same arithmetic, half the per-block regex work; the oracle
-      // computes strlen(block_text) − strlen(non_anchor) identically)
+      // link density = (visible chars − visible chars outside <a>
+      // spans) / visible chars; n_chars IS the total term, so reuse it
+      // instead of running the visibleText chain on `raw` a second time
+      // (the oracle computes strlen(block_text) − strlen(non_anchor)
+      // identically)
       .withColumn("link_density_micros", Micros.ratio(
         col("n_chars") - length(visibleText(
           regexp_replace(col("raw"), "(?is)<a[\\s>].*?</a>", "")))

@@ -469,57 +469,9 @@ class StreamRegistry(spark: SparkSession, val root: String,
     touched
   }
 
-  /** Atomically claim a stream name: create-exclusive write of the schema
-    * file, so exactly ONE caller across processes succeeds and every
-    * other racer gets `FileAlreadyExistsException` — the fence for
-    * publish-once artifacts (e.g. a trained model/quantizer) where an
-    * exists()+write check-then-act would let two producers both append.
-    * (Atomic on HDFS via create-exclusive and on the local FS via NIO
-    * O_EXCL; object stores without atomic create-exclusive need their
-    * conditional-put equivalent.) */
-  def createExclusive(name: String, schema: StructType,
-                      partitionBy: Seq[String] = Nil): Unit = {
-    val (p, fs) = fsFor(schemaPath(name))
-    fs.mkdirs(p.getParent)
-    // Both branches write the FULL content to a private temp file first
-    // and make the claim visible in one atomic step: claiming first and
-    // writing content second left a crash window where the name was
-    // fenced forever by an empty, unparseable schema file.
-    fs match {
-      case _: org.apache.hadoop.fs.LocalFileSystem |
-           _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        // Hadoop's local create(overwrite=false) is exists()-then-create,
-        // NOT O_EXCL. NIO createLink(claim, tmp) is an atomic-exclusive
-        // link(2): exactly one racer wins, and the winner's claim file is
-        // born with its complete content.
-        val nio = java.nio.file.Paths.get(p.toUri.getPath)
-        val tmp = nio.resolveSibling(
-          s"${nio.getFileName}.${java.util.UUID.randomUUID}.tmp")
-        Files.write(tmp, schema.json.getBytes(StandardCharsets.UTF_8))
-        try Files.createLink(nio, tmp)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(p.toString) }
-        Files.deleteIfExists(tmp); ()
-      case _ =>
-        // HDFS: rename is atomic at the namenode and fails (false) when
-        // the destination exists — the claim carries its content with it
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"${p.toString}.${java.util.UUID.randomUUID}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-        if (!fs.rename(tmp, p)) {
-          fs.delete(tmp, true)
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(p.toString)
-        }
-    }
-    if (partitionBy.nonEmpty) writeText(partitionsPath(name), partitionBy.mkString(","))
-  }
-
   /** Delete a stream: data directory, schema, and partition metadata.
-    * The inverse of the implicit create — used by publishers to unclaim
-    * a name after a failed publish, and by maintenance to drop retired
-    * streams. Consumers must be stopped first (their checkpoints are NOT
+    * The inverse of the implicit create — used by maintenance to drop
+    * retired streams. Consumers must be stopped first (their checkpoints are NOT
     * removed — a re-created stream resumes from them by design). */
   def delete(name: String): Unit = {
     Seq(streamDir(name), s"${streamDir(name)}.old", s"${streamDir(name)}.compacting",

@@ -10,10 +10,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Session-scoped SQL registration of a native expression builder. */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

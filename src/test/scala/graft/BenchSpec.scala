@@ -44,4 +44,18 @@ class BenchSpec extends AnyFunSuite {
       ok.get("shuffle_write_bytes").asLong === 20L)
     assert(parsed(1).get("queries").get("q_all_failed").asDouble === -1.0)
   }
+
+  test("SPARK_GRAFT_ONLY: names trimmed, empty segments dropped, unknown names fail") {
+    val a = "q01_pricing_summary"
+    val b = "q30_exact_dedup"
+    assert(Bench.select(Some(s"$a, $b")).map(_._1) === Seq(a, b))
+    assert(Bench.select(Some(s"$b,,$a,")).map(_._1) === Seq(a, b))
+    assert(Bench.select(None).size === SparkEntry.queries.size)
+    val e = intercept[IllegalArgumentException](
+      Bench.select(Some(s"$a,q01_pricing_sumary, nope")))
+    // every unknown name is reported; the known one is not
+    assert(e.getMessage.contains("nope") &&
+      e.getMessage.contains("q01_pricing_sumary") && !e.getMessage.contains(a),
+      e.getMessage)
+  }
 }

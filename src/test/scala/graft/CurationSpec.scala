@@ -353,22 +353,6 @@ class CurationSpec extends SparkSpec {
     assert(byId(1L)._3 === 1 && byId(2L)._3 === 1)
   }
 
-  test("perplexityBucketsApprox: near-total agreement with the exact tiers") {
-    val exact = Curation.perplexityBuckets(docs, docs, buckets = 3)
-      .select(col("doc_id"), col("bucket"))
-    val approx = Curation.perplexityBucketsApprox(docs, docs, buckets = 3)
-      .select(col("doc_id"), col("bucket").as("b2"))
-    val joined = exact.join(approx, "doc_id").cache()
-    try {
-      val n = joined.count()
-      assert(n === docs.count()) // full coverage in both forms
-      val agree = joined.filter(col("bucket") === col("b2")).count()
-      // disagreement is confined to threshold ties (ntile force-splits
-      // equal scores; thresholds cannot)
-      assert(agree.toDouble / n >= 0.9, s"only $agree/$n tiers agree")
-    } finally joined.unpersist()
-  }
-
   test("dsirLogRatio: hand-computed smoothed log-ratios on a two-doc pool") {
     val s = spark
     import s.implicits._

@@ -58,7 +58,6 @@ class EntitySpec extends SparkSpec {
   }
 
   test("jaro_winkler SQL registration and null handling") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT jaro_winkler('martha', 'marhta') AS a, " +
         "jaro_winkler('x', CAST(NULL AS STRING)) AS b")

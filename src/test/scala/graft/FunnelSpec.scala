@@ -55,70 +55,6 @@ class FunnelSpec extends SparkSpec {
     }
   }
 
-  test("streamingFunnelTimes over batches equals the batch funnel on in-order logs") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    val types = Seq("view", "click", "purchase", "noise")
-    val rnd = new scala.util.Random(23)
-    // in-order per-user log: generate sorted by ts, split into 3 batches
-    val ev = Seq.tabulate(240)(i =>
-      (rnd.nextInt(12).toLong, types(rnd.nextInt(types.size)), i.toLong))
-    val mem = MemoryStream[(Long, String, Long)]
-    val out = graft.ops.Funnel.streamingFunnelTimes(mem.toDS(),
-        Seq("view", "click", "purchase"))
-      .map { case (u, ts) => (u, ts(0), ts(1), ts(2)) }
-      .toDF("user_id", "ts1", "ts2", "ts3")
-    val q = out.writeStream.format("memory").queryName("sfunnel")
-      .outputMode(OutputMode.Update).start()
-    try {
-      ev.grouped(80).foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    // update mode appends one row per (user, batch); state is monotone, so
-    // the final state per user is the row with the most set fields (ties
-    // are identical rows)
-    val got = s.sql("SELECT * FROM sfunnel").collect()
-      .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
-        Option(r.get(2)).map(_.asInstanceOf[Long]),
-        Option(r.get(3)).map(_.asInstanceOf[Long])))
-      .groupBy(_._1)
-      .map { case (_, rows) => rows.maxBy(r => Seq(r._2, r._3, r._4).count(_.nonEmpty)) }
-      .filter(_._2.nonEmpty) // batch path emits only users who reached step 1
-      .toSet
-    val batch = Funnel.funnelTimes(ev.toDF("user_id", "event_type", "ts"),
-        Seq("view", "click", "purchase"))
-      .collect()
-      .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
-        Option(r.get(2)).map(_.asInstanceOf[Long]),
-        Option(r.get(3)).map(_.asInstanceOf[Long])))
-      .toSet
-    assert(got === batch)
-  }
-
-  test("streamingFunnelTimes handles repeated step types (view → view → purchase)") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    val mem = MemoryStream[(Long, String, Long)]
-    val out = graft.ops.Funnel.streamingFunnelTimes(mem.toDS(),
-        Seq("view", "view", "purchase"))
-      .map { case (u, ts) => (u, ts(0), ts(1), ts(2)) }
-      .toDF("user_id", "ts1", "ts2", "ts3")
-    val q = out.writeStream.format("memory").queryName("sfunnel_rep")
-      .outputMode(OutputMode.Update).start()
-    try {
-      mem.addData((1L, "view", 10L), (1L, "view", 20L), (1L, "purchase", 30L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val r = s.sql("SELECT * FROM sfunnel_rep").collect().last
-    // indexOf-based matching would pin both views to slot 0 → (10, null, null)
-    assert((r.getLong(1), r.getLong(2), r.getLong(3)) === ((10L, 20L, 30L)))
-  }
-
   test("profile ops accept column names containing dots") {
     val df = Seq((1L, 2.0), (2L, 4.0), (2L, 6.0)).toDF("a.b", "x.y")
     val prof = Profile.profile(df).orderBy("col_name").collect()

@@ -94,7 +94,6 @@ class HtmlUnescapeSpec extends SparkSpec {
     "stays inside whole-stage codegen") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(Some("caf&eacute; &#8212; A&amp;B &bad; &#x27;"), None)
       .toDF("t")
     val viaCol = df.select(HtmlUnescapeFunctions.htmlUnescape(col("t")))

@@ -69,7 +69,6 @@ class MinHashExprSpec extends SparkSpec {
   }
 
   test("SQL registration: minhash_band_keys / simhash64 callable from spark.sql") {
-    graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT size(minhash_band_keys(shingle_hashes(split('a b c d e', ' '), 3))) AS nb, " +
       "simhash64(shingle_hashes(split('a b c d e', ' '), 3)) AS h").collect()(0)
@@ -81,7 +80,6 @@ class MinHashExprSpec extends SparkSpec {
   }
 
   test("SQL registration honors explicit (minHashes, bands) arguments") {
-    graft.functions.GraftFunctions.register(spark)
     // silently pinning (128, 32) here would return 32 bands regardless
     val got = spark.sql(
       "SELECT size(minhash_band_keys(shingle_hashes(split('a b c d e', ' '), 3), 64, 16)) AS nb")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Blake2b, GraftFunctions, GraftExtensions}
+import graft.functions.{Blake2b, GraftFunctions, SqlFunctions}
 import graft.ops.{Dedup, MinHashSignatureAgg}
 
 /** Native Catalyst expression + UDAF surface. */
@@ -70,19 +70,21 @@ class NativeHashSpec extends SparkSpec {
   }
 
   test("SQL registration: blake2b callable from spark.sql") {
-    GraftFunctions.register(spark)
     val got = spark.sql("SELECT blake2b_256('abc') AS h, sha3_512('abc') AS s").collect()(0)
     assert(got.getString(0) ===
       "bddd813c634239723171ef3fee98579b94964e3bb1cb3e427262c8c068d52319")
     assert(got.getString(1).startsWith("b751850b1a57168a"))
   }
 
-  test("GraftExtensions registers without error") {
-    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+  test("every SQL function resolves in a GraftSession-built session") {
+    // the shared session is built by GraftSession.builder, so these names
+    // can only come from the GraftExtensions it sets — the one install path
+    val missing = SqlFunctions.all.map(_._1)
+      .filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"not installed by GraftExtensions: $missing")
   }
 
   test("jaro_winkler stays in the codegen span; wrong arity/type rejected") {
-    GraftFunctions.register(spark)
     val p = Tables.documents(spark, SparkSpec.sf0001)
       .selectExpr("jaro_winkler(text, source) AS j")
       .queryExecution.executedPlan.toString
@@ -119,7 +121,6 @@ class NativeHashSpec extends SparkSpec {
       .queryExecution.optimizedPlan.toString
     assert(optimized.contains("caf\u00e9"), optimized.take(800))
     // SQL surface
-    GraftFunctions.register(spark)
     val viaSql = spark.sql("SELECT nfc_normalize('cafe\u0301') AS t").collect()(0)
     assert(viaSql.getString(0) === "caf\u00e9")
   }

@@ -233,7 +233,6 @@ class QueriesSpec extends SparkSpec {
 
   test("SQL-first surface: registerAll + spark.sql + native fns end to end") {
     Tables.registerAll(spark, sf0001)
-    graft.functions.GraftFunctions.register(spark)
     val sqlRows = spark.sql(
       """SELECT n_name, count(*) AS n, blake2b_256(n_name) AS h
         |FROM nation JOIN region ON n_regionkey = r_regionkey

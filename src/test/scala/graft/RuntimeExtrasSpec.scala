@@ -288,36 +288,6 @@ class RuntimeExtrasSpec extends SparkSpec {
     f1.foreach(m => assert(m.n_bytes === expected(m.doc_id)))
   }
 
-  test("multimodal resize stub preserves aspect ratio, caps longest side") {
-    implicit val s: SparkSession = spark
-    val docs = Tables.documents(spark, SparkSpec.sf0001).limit(30)
-    val feats = Multimodal.decode(spark, docs)
-    val resized = Multimodal.resizeStub(feats, maxSide = 128).collect()
-    resized.foreach { m =>
-      assert(math.max(m.width, m.height) <= 128 && m.width >= 1 && m.height >= 1)
-    }
-    // aspect ratio within integer-truncation tolerance
-    val orig = feats.collect().map(m => m.doc_id -> m).toMap
-    resized.filter(m => math.max(orig(m.doc_id).width, orig(m.doc_id).height) > 128)
-      .foreach { m =>
-        val o = orig(m.doc_id)
-        val r0 = o.width.toDouble / o.height
-        val r1 = m.width.toDouble / m.height
-        assert(math.abs(r0 - r1) / r0 < 0.1, s"${o.width}x${o.height} -> ${m.width}x${m.height}")
-      }
-  }
-
-  test("multimodal frame offsets are within payload and ordered") {
-    val docs = Tables.documents(spark, SparkSpec.sf0001).limit(10)
-    Multimodal.frameOffsets(docs, k = 4).collect().foreach { r =>
-      val n = r.getAs[Long]("n_bytes")
-      val offs = r.getSeq[Long](2)
-      assert(offs.length === 4)
-      assert(offs === offs.sorted)
-      assert(offs.forall(o => o >= 0 && o < n))
-    }
-  }
-
   test("HTTP ingest: POST /ingest/<stream> lands in the registry, chainable (falcon_api parity)") {
     val reg = new StreamRegistry(spark, Files.createTempDirectory("graft-ingest").toString)
     val ingest = new Ingest(spark, reg, port = 0)

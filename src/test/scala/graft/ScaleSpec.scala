@@ -1,35 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Skew
 
-/** Scale-path mechanics: salting for skew and bucketed co-located joins —
-  * the techniques the 100 TB plan leans on when AQE alone isn't enough. */
+/** Scale-path mechanics: AQE's runtime skew split, bucketed co-located
+  * joins and runtime bloom filters — the techniques the 100 TB plan
+  * leans on. */
 class ScaleSpec extends SparkSpec {
   import SparkSpec.sf0001
-
-  test("salted join equals plain join on a skewed key") {
-    val li = Tables.lineitem(spark, sf0001).select("l_orderkey", "l_partkey", "l_quantity")
-    val part = Tables.part(spark, sf0001).select("p_partkey", "p_brand")
-      .withColumnRenamed("p_partkey", "l_partkey")
-    val plain = li.join(part, Seq("l_partkey"))
-      .groupBy("p_brand").agg(round(sum("l_quantity"), 2).as("q"))
-    val salted = Skew.saltedJoin(li, part, Seq("l_partkey"), salts = 8)
-      .groupBy("p_brand").agg(round(sum("l_quantity"), 2).as("q"))
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty)
-  }
-
-  test("salted two-phase aggregation equals direct aggregation") {
-    val ev = Tables.events(spark, sf0001)
-    val direct = ev.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sv"))
-    val salted = Skew.saltedAgg(ev, "event_type", salts = 8,
-      partial = Seq("n" -> count(lit(1)), "sv" -> sum("value")),
-      merge = Seq("n" -> sum("n"), "sv" -> round(sum("sv"), 2)))
-    val d = direct.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val s = salted.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(d === s)
-  }
 
   test("bucketed tables join without an exchange (co-located join)") {
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
@@ -55,14 +32,11 @@ class ScaleSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("AQE splits the celebrity key at runtime (skew=true in the final " +
-    "plan); the salted fallback agrees on the same input") {
-    // The two layers of the skew story, witnessed on one fixture: AQE's
-    // runtime skew-join split (first line of defense — needs no code
-    // change) actually TRIGGERING, and Skew.saltedJoin (the explicit
-    // path for known-pathological keys) agreeing exactly. Thresholds are
-    // scaled down so a unit-test-sized celebrity partition counts as
-    // skewed; the detection logic is the same one production uses.
+  test("AQE splits the celebrity key at runtime (skew=true in the final plan)") {
+    // AQE's runtime skew-join split (the skew mechanism that runs — it
+    // needs no code change) actually TRIGGERING. Thresholds are scaled
+    // down so a unit-test-sized celebrity partition counts as skewed;
+    // the detection logic is the same one production uses.
     val s2 = spark
     import s2.implicits._
     val confs = Seq(
@@ -88,13 +62,6 @@ class ScaleSpec extends SparkSpec {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         "AQE did not mark the join skewed:\n" + plan.take(4000))
-      // explicit fallback: bit-identical result set on the same input
-      val salted = Skew.saltedJoin(big, dim, Seq("k"), salts = 8)
-      assert(joined.exceptAll(salted).isEmpty && salted.exceptAll(joined).isEmpty)
-      val saltedPlan = salted.queryExecution.executedPlan.toString
-      assert(!saltedPlan.contains("skew=true"),
-        "salting should pre-split the key so AQE sees no skew:\n" +
-          saltedPlan.take(4000))
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

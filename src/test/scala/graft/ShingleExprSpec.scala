@@ -68,7 +68,6 @@ class ShingleExprSpec extends SparkSpec {
   }
 
   test("SQL registration: shingle_hashes callable from spark.sql") {
-    graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT size(shingle_hashes(array('a','b','c','d'), 3)) AS n, " +
       "size(shingle_hashes(split('a b c d', ' '))) AS dflt")
@@ -97,7 +96,6 @@ class ShingleExprSpec extends SparkSpec {
   }
 
   test("shingle_pos_hashes: positional count, distinct-set parity, SQL call") {
-    graft.functions.GraftFunctions.register(spark)
     // n tokens → n-k+1 positional grams, and their distinct set must equal
     // the ShingleHashes set (same hash family, dedup is the only delta)
     val rows = Tables.documents(spark, SparkSpec.sf0001)
@@ -117,7 +115,6 @@ class ShingleExprSpec extends SparkSpec {
   }
 
   test("SQL-reachable null array elements hash like empty strings, no NPE") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT shingle_pos_hashes(array('a', NULL, 'b'), 2) AS p, " +
       "shingle_hashes(array('a', NULL, 'b'), 2) AS h, " +
@@ -151,7 +148,6 @@ class ShingleExprSpec extends SparkSpec {
     }.toMap
     assert(native === exact)
     // SQL registration + empty edge
-    graft.functions.GraftFunctions.register(spark)
     val e = spark.sql(
       "SELECT token_top_count(split('a b a a', ' ')) AS c1, " +
       "token_top_count(CAST(array() AS ARRAY<STRING>)) AS c0").collect()(0)
@@ -178,7 +174,6 @@ class ShingleExprSpec extends SparkSpec {
     val df = spark.createDataFrame(
       Seq("one", "a a a a", "x y x y x", "").map(Tuple1(_))).toDF("text")
     df.createOrReplaceTempView("btc_edge")
-    graft.functions.GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT bigram_top_count(split(text, ' ')) FROM btc_edge")
       .collect().map(_.getLong(0))

@@ -294,33 +294,19 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.3, s"recall=$recall")
   }
 
-  test("IVF quantizer round-trips through the registry; search output unchanged") {
+  test("IVF trained once, searched with annIvfWith: output equals annIvf") {
     val emb = Tables.embeddings(spark, sf0001)
     val queries = emb.filter(col("vec_id") < 20)
     val centers = Similarity.trainIvfCenters(emb)
-    val reg = new graft.runtime.StreamRegistry(spark,
-      java.nio.file.Files.createTempDirectory("graft-ivf").toString)
-    Similarity.saveIvfCenters(spark, reg, "ivf_q", centers)
-    val loaded = Similarity.loadIvfCenters(reg, "ivf_q")
-    assert(loaded.length === centers.length)
-    centers.zip(loaded).foreach { case (a, b) => assert(a.toSeq === b.toSeq) }
-    // search with the loaded artifact == the train-inline path (same
+    // search with the pre-trained centers == the train-inline path (same
     // default nlist/trainCap/seed), proving train-once/search-many works
     def res(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val fresh = res(Similarity.annIvf(spark, queries, emb, k = 5)
       .select("q_id", "rnk", "c_id"))
-    val reused = res(Similarity.annIvfWith(queries, emb, loaded, k = 5)
+    val reused = res(Similarity.annIvfWith(queries, emb, centers, k = 5)
       .select("q_id", "rnk", "c_id"))
     assert(reused === fresh)
-    // one artifact per name: a second save must be refused, not appended
-    intercept[IllegalArgumentException] {
-      Similarity.saveIvfCenters(spark, reg, "ivf_q", centers)
-    }
-    // delete unclaims the name: a fresh save then succeeds and loads whole
-    reg.delete("ivf_q")
-    Similarity.saveIvfCenters(spark, reg, "ivf_q", centers)
-    assert(Similarity.loadIvfCenters(reg, "ivf_q").length === centers.length)
   }
 
   test("lshCosineNearDupPairs == quadratic confirm on planted near-dups (recall 1.0)") {
@@ -775,16 +761,25 @@ class SimilaritySpec extends SparkSpec {
       Similarity.pqTrain(emb, m = 1, ksub = 1))
     assert(mixed.getMessage.contains("mixes embedding dimensions") &&
       mixed.getMessage.contains("1/2/3"), mixed.getMessage)
+    // the bounded-sample trainer has the same guards (one IVF center:
+    // the dimension checks run before the centers are used)
     val mixedSampled = intercept[IllegalArgumentException](
-      Similarity.pqTrainSampled(emb, m = 1, ksub = 1))
+      Similarity.pqTrainSampledResidual(emb, Array(Array(0.0)), m = 1, ksub = 1))
     assert(mixedSampled.getMessage.contains("mixes embedding dimensions"),
       mixedSampled.getMessage)
     // a null embedding is excluded from the sample (pqTrain's dim-
     // consensus tolerance), not an anonymous NPE
     val withNull = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 1.0)),
       (2L, null.asInstanceOf[Seq[Double]])).toDF("vec_id", "embedding")
-    val m2 = Similarity.pqTrainSampled(withNull, m = 2, ksub = 2, iters = 1)
+    val oneCenter = Array(Array(0.0, 0.0))
+    val m2 = Similarity.pqTrainSampledResidual(withNull, oneCenter, m = 2,
+      ksub = 2, iters = 1)
     assert(m2.m === 2 && m2.dsub === 1)
+    // an all-null corpus leaves an empty sample: refused by name
+    val empty = intercept[IllegalArgumentException](
+      Similarity.pqTrainSampledResidual(withNull.filter(col("vec_id") === 2L),
+        oneCenter, m = 2, ksub = 2))
+    assert(empty.getMessage.contains("needs a non-empty corpus"), empty.getMessage)
   }
 
   test("annIvfPq: planted near-dups retrieved at rank 1 from the " +
@@ -930,45 +925,6 @@ class SimilaritySpec extends SparkSpec {
     val pq2 = Similarity.annIvfPq(queries, index, centers, model, k = 5)
       .select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pq2 === pq)
-  }
-
-  test("PQ model round-trips through the registry; encode output unchanged; " +
-      "shape damage fails loudly") {
-    val s2 = spark
-    import s2.implicits._
-    val emb = Tables.embeddings(spark, sf0001)
-    val model = Similarity.pqTrainSampled(emb, m = 4, ksub = 8, iters = 2)
-    val reg = new graft.runtime.StreamRegistry(spark,
-      java.nio.file.Files.createTempDirectory("graft-pq").toString)
-    Similarity.savePqModel(spark, reg, "pq_q", model)
-    val loaded = Similarity.loadPqModel(reg, "pq_q")
-    assert(loaded.dsub === model.dsub && loaded.m === model.m &&
-      loaded.ksub === model.ksub)
-    for (s <- 0 until model.m; c <- 0 until model.ksub)
-      assert(loaded.codebooks(s)(c).toSeq === model.codebooks(s)(c).toSeq)
-    // the loaded artifact encodes bit-identically to the in-memory model
-    val a = Similarity.pqEncode(emb, model).orderBy("vec_id").collect()
-      .map(_.getSeq[Int](1).toSeq)
-    val b = Similarity.pqEncode(emb, loaded).orderBy("vec_id").collect()
-      .map(_.getSeq[Int](1).toSeq)
-    assert(a.toSeq === b.toSeq)
-    // one artifact per name; delete unclaims
-    intercept[IllegalArgumentException] {
-      Similarity.savePqModel(spark, reg, "pq_q", model)
-    }
-    reg.delete("pq_q")
-    Similarity.savePqModel(spark, reg, "pq_q", model)
-    assert(Similarity.loadPqModel(reg, "pq_q").m === model.m)
-    // a missing subspace must fail loudly, not shrink the model
-    val damaged = (for {
-      s <- 0 until model.m; c <- 0 until model.ksub; if s != 1
-    } yield (s, c, model.codebooks(s)(c).toSeq))
-      .toDF("subspace", "cid", "center")
-    reg.createExclusive("pq_damaged", damaged.schema)
-    reg.write(damaged, "pq_damaged")
-    val e = intercept[IllegalArgumentException](
-      Similarity.loadPqModel(reg, "pq_damaged"))
-    assert(e.getMessage.contains("non-contiguous subspace ids"), e.getMessage)
   }
 
   test("annIvfPqAdc: per-pair ADC equals the driver table sum; planted " +

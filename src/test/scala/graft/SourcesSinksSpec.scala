@@ -338,22 +338,6 @@ class SourcesSinksSpec extends SparkSpec {
     intercept[UnsupportedOperationException] { bad.nextSeq("s") }
   }
 
-  test("createExclusive: winner's claim carries full content, loser " +
-    "raises, no temp debris") {
-    import org.apache.spark.sql.types.{LongType, StructType}
-    val reg = new StreamRegistry(spark,
-      Files.createTempDirectory("graft-claim").toString)
-    val schema = new StructType().add("id", LongType)
-    reg.createExclusive("claim", schema)
-    assert(reg.schemaOf("claim").fieldNames.toSeq === Seq("id"))
-    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
-      reg.createExclusive("claim", schema)
-    }
-    val debris = new java.io.File(s"${reg.root}/schemas").listFiles()
-      .map(_.getName).filter(_.contains(".tmp"))
-    assert(debris.isEmpty, debris.mkString(","))
-  }
-
   test("JSON serde roundtrip: to_json / from_json / schema_of_json (O13)") {
     val s = spark
     import s.implicits._

@@ -4,15 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one JVM-wide session; suites are
-  * read-only over the fixtures). */
+  * read-only over the fixtures), built with the same settings and SQL
+  * functions as `Bench` and `Verify`. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

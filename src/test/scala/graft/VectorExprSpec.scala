@@ -41,7 +41,6 @@ class VectorExprSpec extends SparkSpec {
   test("vec_dot: a null ELEMENT yields null, matching the HOF semantics") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT vec_dot(array(1.0d, CAST(NULL AS DOUBLE)), array(2.0d, 3.0d)) AS d")
       .collect()(0)
@@ -49,7 +48,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("SQL builders reject wrong arity loudly") {
-    graft.functions.GraftFunctions.register(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT blake2b_256('a', 512)").collect() // extra arg ≠ blake2b_512!
     }
@@ -118,7 +116,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("SQL registration: vec_dot callable from spark.sql") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
       .collect()(0).getDouble(0)

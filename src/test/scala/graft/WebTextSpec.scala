@@ -133,7 +133,6 @@ class WebTextSpec extends SparkSpec {
     assert(av("<a>") === "")
     assert(av("plain text") === "")
     // SQL + codegen surface
-    graft.functions.GraftFunctions.register(spark)
     val got = Seq("<a rel='me nofollow'>").toDF("t")
       .selectExpr("attr_value(t, 'rel') AS v").as[String].head()
     assert(got === "me nofollow")
@@ -223,36 +222,6 @@ class WebTextSpec extends SparkSpec {
       plan.take(1200))
   }
 
-  test("loadPublicSuffixList: comments/blanks dropped, rule syntax " +
-    "passes through, section filters honor the ===BEGIN=== markers") {
-    val f = java.nio.file.Files.createTempFile("psl", ".dat")
-    java.nio.file.Files.writeString(f, Seq(
-      "// comment header", "",
-      "// ===BEGIN ICANN DOMAINS===",
-      "com", "co.uk", "*.ck", "!www.ck", "  padded.example  ", "",
-      "// ===END ICANN DOMAINS===",
-      "// ===BEGIN PRIVATE DOMAINS===",
-      "github.io", "*.s3.amazonaws.example",
-      "// ===END PRIVATE DOMAINS===").mkString("\n"))
-    def load(sec: String) =
-      WebText.loadPublicSuffixList(spark, f.toString, sec)
-        .as[String].collect().toSeq
-    assert(load("all") === Seq("com", "co.uk", "*.ck", "!www.ck",
-      "padded.example", "github.io", "*.s3.amazonaws.example"))
-    assert(load("icann") === Seq("com", "co.uk", "*.ck", "!www.ck",
-      "padded.example"))
-    assert(load("private") === Seq("github.io", "*.s3.amazonaws.example"))
-    intercept[IllegalArgumentException] {
-      WebText.loadPublicSuffixList(spark, f.toString, "bogus")
-    }
-    // the loaded frame composes with the domain join end-to-end
-    val d = WebText.registeredDomainByTable(
-        Seq("http://a.b.foo.ck/").toDF("url"), "url",
-        WebText.loadPublicSuffixList(spark, f.toString))
-      .select("domain").as[String].head()
-    assert(d === "b.foo.ck")
-  }
-
   test("normalizePercent: unreserved decode, hex uppercase, reserved " +
     "kept, malformed verbatim") {
     val got = Seq(
@@ -269,7 +238,6 @@ class WebTextSpec extends SparkSpec {
 
   test("url_resolve / robots_glob / pct_normalize SQL registration " +
     "and null handling") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT url_resolve('http://a/b/c', '../g') AS u, " +
         "robots_glob('/index.php', '/*.php$') AS g, " +
@@ -314,16 +282,6 @@ class WebTextSpec extends SparkSpec {
       ("u3", "full", "", "")))
   }
 
-  test("filterBlockedDomains drops every URL under the blocked eTLD+1") {
-    val df = Seq(
-      1L -> "http://spam.co.uk/a", 2L -> "http://sub.spam.co.uk/b",
-      3L -> "http://ham.com/c").toDF("id", "url")
-    val blocked = Seq("spam.co.uk").toDF("domain")
-    val kept = WebText.filterBlockedDomains(df, "url", blocked)
-      .select("id").as[Long].collect().toSeq
-    assert(kept === Seq(3L))
-  }
-
   test("visibleText strips script/style/comments/tags and decodes entities") {
     val html =
       """<html><head><title>T</title><style>p { color: red }</style></head>
@@ -341,22 +299,6 @@ class WebTextSpec extends SparkSpec {
     val got = Seq(html).toDF("h")
       .select(WebText.visibleText(col("h")).as("v")).as[String].head()
     assert(got === "keep")
-  }
-
-  test("extractLinks: quotes, attribute order, &amp;, relative skipped") {
-    val html =
-      """<a href="http://a.com/x?p=1&amp;q=2">one</a>
-        |<A CLASS='nav' HREF='https://b.org/y'>two</A>
-        |<a rel="nofollow" href="/relative/path">skip</a>
-        |<a href='ftp://c.net/z'>non-http skip</a>
-        |<p>no <b>links</b> here</p>
-        |<a data-href="http://decoy.bad/x">attr-suffix decoy skip</a>
-        |<a data-x="1" href="HTTPS://D.io/w">four</a>""".stripMargin
-    val got = Seq(html).toDF("h")
-      .select(WebText.extractLinks(col("h")).as("l"))
-      .as[Seq[String]].head()
-    assert(got === Seq("http://a.com/x?p=1&q=2", "https://b.org/y",
-      "HTTPS://D.io/w"))
   }
 
   test("anchorTexts: nested markup stripped, entities decoded in order, " +
@@ -455,18 +397,6 @@ class WebTextSpec extends SparkSpec {
       ("other.net", "one.co.uk", 1L),
       ("src.com", "one.co.uk", 2L),
       ("src.com", "two.org", 1L)))
-  }
-
-  test("linkDensityMicros: nav-chrome rows score high, prose rows low") {
-    val rows = Seq(
-      "<p><a href='/1'>Home</a> <a href='/2'>About</a></p>",              // all links
-      "<p>Long prose paragraph with one <a href='/x'>link</a> inside</p>", // mostly text
-      "<p>No links at all here</p>")
-      .toDF("h").select(WebText.linkDensityMicros(col("h")).as("m"))
-      .as[Long].collect().toSeq
-    assert(rows(0) === 1000000L)
-    assert(rows(1) > 0L && rows(1) < 500000L)
-    assert(rows(2) === 0L)
   }
 
   // 100 chars of zero-link prose — classifies good under the default
